@@ -91,4 +91,20 @@ object Checkpoint {
           df.localCheckpoint(false))
         (cp, cp.filter(pred).count() > 0)
     }
+
+  /** [[of]] fused with a row count: materialize `df` and return how many
+    * rows it holds — ONE job in local mode, by the same fusion as
+    * [[ofChanged]] (lazy checkpoint, filled by the count's full scan).
+    * Reliable mode stays eager for the same reason, and its count reads
+    * the checkpointed files. The count runs on the RDD: `Dataset.count`
+    * plans an aggregate whose exchange is a second job under AQE.
+    */
+  def ofCounted(df: DataFrame): (DataFrame, Long) = {
+    val cp = reliableDir(df) match {
+      case Some(_) => of(df)
+      case None =>
+        org.apache.spark.sql.graft.Shim.capStats(df.localCheckpoint(false))
+    }
+    (cp, cp.queryExecution.toRdd.count())
+  }
 }

@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{Q, Tables}
 import graft.text.TextOps
@@ -903,30 +904,125 @@ object Dedup {
     FROM sep"""))
 
   // ------------------------------------------------------- dedup_clusters
-  /** Connected components over an undirected edge set by iterative
-    * min-label propagation — the DataFrame re-expression of GraphX's
-    * Pregel `connectedComponents` (each round every node takes the min of
-    * its own label and its neighbors' labels; labels only decrease, so
-    * the fixpoint assigns every node the min id of its component).
-    *
-    * `edges`: (u, v) pairs in any orientation, u ≠ v. Returns (id, label)
-    * for every node that appears in an edge; isolated nodes are the
-    * caller's coalesce.
-    *
-    * Scale: one round = one equi-join + one map-side-combined min
-    * aggregate, both shuffling THIN (id, label) longs on the id key — a
-    * 1000-executor cluster reuses the same hash partitioning every round.
-    * Rounds = component diameter; near-dup graphs are dense star-ish
-    * clusters (diameter ≤ 3–4 even at web scale, because every member
-    * overlaps the same template), so the bound that matters in practice
-    * is small — for adversarially chained graphs swap in the
-    * alternating-star algorithm (Kiveris et al., MRC'14), same join
-    * shape. Labels are checkpointed per round (lineage would otherwise
-    * grow by one join per iteration), and convergence is a LIMIT-1 probe
-    * (labels strictly decrease, so one surviving row ⇒ not converged).
+  /** The largest edge frame [[connectedComponents]] solves on the driver,
+    * in input rows. 2^20 rows ship as 16 MB of packed (u, v) longs and
+    * yield at most 2^21 node rows — a fixed size, whatever the corpus.
+    * Near-dup pair graphs sit far below it (hundreds of pairs per 3k
+    * docs, ~2k phash pairs at sf1), while the distributed loop spends
+    * ≥ 2 jobs per round on graphs of any size.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val sym = edges.select(col("u"), col("v"))
+  private[graft] val DRIVER_CC_ROWS = 1L << 20
+
+  /** Connected components over an undirected edge set: (id, label) for
+    * every node that appears in an edge, label = the min id of the
+    * node's component. Isolated nodes are the caller's coalesce.
+    *
+    * `edges`: (u, v) pairs in any orientation; duplicate and reversed
+    * rows and self-loops are harmless. A null endpoint joins nothing:
+    * its partner is still a node, and null ids report one (null, null)
+    * row. `maxIter` caps only the distributed loop's rounds.
+    *
+    * The edges are materialized ONCE, and counted in the same job
+    * ([[graft.Checkpoint.ofCounted]]). Then:
+    *
+    *   - at most [[DRIVER_CC_ROWS]] rows of LongType ids: ONE more job
+    *     collects them packed as longs, and an exact union-find runs on
+    *     the driver. It always unions into the smaller root, so every
+    *     root is its component's min id. The answer is a local frame
+    *     (LocalRelation). Driver-resident state is legal only when it is
+    *     bounded, never corpus-sized: the bound caps it at 16 MB of edges
+    *     and 2^21 node rows.
+    *   - above the bound, or with non-long ids (an IntegerType frame
+    *     always takes the loop, which keeps its id type): the distributed
+    *     loop below, over the edges already materialized — the edge
+    *     lineage never runs twice.
+    *
+    * Both paths return the same rows with the same schema (id and
+    * label of the widened u/v type, nullable iff u or v is); DedupSpec
+    * pins it on random, chain, star and degenerate graphs.
+    *
+    * The loop is iterative min-label propagation — the DataFrame
+    * re-expression of GraphX's Pregel `connectedComponents` (each round
+    * every node takes the min of its own label and its neighbors'
+    * labels; labels only decrease, so the fixpoint assigns every node the
+    * min id of its component). One round = one equi-join + one
+    * map-side-combined min aggregate, both shuffling THIN (id, label)
+    * longs on the id key — a 1000-executor cluster reuses the same hash
+    * partitioning every round. Pointer doubling makes it O(log d)
+    * rounds for component diameter d; for adversarially chained graphs
+    * swap in the alternating-star algorithm (Kiveris et al., MRC'14),
+    * same join shape. Labels are checkpointed per round (lineage would
+    * otherwise grow by one join per iteration), and convergence is
+    * probed in the same job (labels strictly decrease, so one surviving
+    * row ⇒ not converged).
+    */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponents(edges, maxIter, DRIVER_CC_ROWS)
+
+  /** `driverRows` is DedupSpec's seam for forcing either path. */
+  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int,
+      driverRows: Long): DataFrame = {
+    val (cp, n) =
+      graft.Checkpoint.ofCounted(edges.select(col("u"), col("v")))
+    if (n <= driverRows && cp.schema.forall(_.dataType == LongType))
+      componentsOnDriver(cp)
+    else componentsLoop(cp, maxIter)
+  }
+
+  /** The loop's fixpoint for a materialized long (u, v) frame, on the
+    * driver; see [[connectedComponents]].
+    */
+  private def componentsOnDriver(cp: DataFrame): DataFrame = {
+    // one job: each partition ships its edges as flat (u, v) longs; a
+    // null endpoint turns the edge into its partner's self-loop, and a
+    // flag asks for the loop's one (null, null) row
+    val parts = cp.queryExecution.toRdd.mapPartitions { rows =>
+      val uv = Array.newBuilder[Long]
+      var sawNull = false
+      rows.foreach { r =>
+        val (nu, nv) = (r.isNullAt(0), r.isNullAt(1))
+        sawNull ||= nu || nv
+        if (!nu || !nv) {
+          val u = if (nu) r.getLong(1) else r.getLong(0)
+          uv += u
+          uv += (if (nv) u else r.getLong(1))
+        }
+      }
+      Iterator.single((uv.result(), sawNull))
+    }.collect()
+    val uv = parts.flatMap(_._1)
+    // node ids sorted and unique: a smaller index IS a smaller id
+    val ids = uv.clone()
+    java.util.Arrays.sort(ids)
+    var m = 0
+    ids.foreach { x => if (m == 0 || ids(m - 1) != x) { ids(m) = x; m += 1 } }
+    val node = java.util.Arrays.copyOf(ids, m)
+    val parent = Array.range(0, m)
+    def root(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    var k = 0
+    while (k < uv.length) {
+      val a = root(java.util.Arrays.binarySearch(node, uv(k)))
+      val b = root(java.util.Arrays.binarySearch(node, uv(k + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      k += 2
+    }
+    val out = new java.util.ArrayList[Row](m + 1)
+    if (parts.exists(_._2)) out.add(Row(null, null))
+    (0 until m).foreach(i => out.add(Row(node(i), node(root(i)))))
+    val nullable = cp.schema.exists(_.nullable)
+    cp.sparkSession.createDataFrame(out, StructType(Seq("id", "label")
+      .map(StructField(_, LongType, nullable))))
+  }
+
+  /** The distributed loop of [[connectedComponents]], over a
+    * materialized (u, v) frame.
+    */
+  private def componentsLoop(edges: DataFrame, maxIter: Int): DataFrame = {
+    val sym = edges
       .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .transform(graft.Checkpoint.of)
@@ -986,15 +1082,11 @@ object Dedup {
       // (Checkpoint.ofChanged): the probe's scan is the action that
       // fills the round's checkpoint — halving the per-round action
       // count that floors this loop's cost.
-      val tR = System.nanoTime()
       val (next, changed) =
         graft.Checkpoint.ofChanged(plan, col("label") < col("old"))
       labels = next.select(col("id"), col("label"))
       converged = !changed
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $i changed=$changed " +
-          f"action=${(System.nanoTime() - tR) / 1e9}%.2f s")
     }
     labels
   }

@@ -1172,6 +1172,7 @@ object Multimodal {
     * small.
     *
     * Scale: pairs are the banded equi-join (never media×media); CC is
+    * a driver union-find while the pair graph fits its bound, else
     * O(log d) checkpointed rounds on the thin edge list; the label join
     * back is broadcast-able (labels ≤ |media in pairs|).
     */

@@ -2409,8 +2409,9 @@ object Knn {
     * components: global connectivity — the "is my embedding space one
     * blob or many islands" diagnostic, and the same label machinery
     * dedup's cluster assignment runs). Reuses
-    * [[graft.dedup.Dedup.connectedComponents]] (iterated min-label
-    * propagation over thin (id, label) longs, checkpointed per round);
+    * [[graft.dedup.Dedup.connectedComponents]] (a driver union-find
+    * for bounded graphs, else iterated min-label propagation over thin
+    * (id, label) longs, checkpointed per round);
     * the oracle recomputes the closure with a recursive CTE over the
     * mirrored edge list, so a green row proves the edge list AND the
     * fixpoint. Output carries the component size — the quantity a
@@ -2422,14 +2423,10 @@ object Knn {
   private def componentsReport(s: SparkSession, dir: String,
       rawEdges: DataFrame,
       coverage: Option[DataFrame] = None): DataFrame = {
-      // materialized BEFORE the CC loop: connectedComponents unions both
-      // edge orientations, and without the barrier each union branch
-      // re-runs the whole edge lineage (for the in-query derivation
-      // that is the IVF kNN-join — train+assign+probe+topk, ~2× the
-      // graph cost, measured 1.8 s of the query's 9.4 s)
-      val edges = graft.Checkpoint.of(rawEdges
+      // no barrier: connectedComponents materializes its edges once, so
+      // the edge lineage (in-query: the IVF kNN-join) runs once
+      val labels = graft.dedup.Dedup.connectedComponents(rawEdges
         .select(col("query_id").as("u"), col("neighbor_id").as("v")))
-      val labels = graft.dedup.Dedup.connectedComponents(edges)
       val lab = coverage.getOrElse(emb(s, dir)).select(col("vec_id"))
         .join(labels.select(col("id").as("vec_id"), col("label")),
           Seq("vec_id"), "left")

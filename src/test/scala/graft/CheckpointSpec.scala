@@ -62,6 +62,28 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
+  test("ofCounted returns identical rows and count in both modes") {
+    val df = spark.range(1000).repartition(4).toDF()
+    val (cpL, nL) = Checkpoint.ofCounted(df)
+    assert(nL == 1000 && cpL.count() == 1000)
+    val dir = Files.createTempDirectory("graft-ckpt-counted").toFile
+    try {
+      spark.conf.set(Checkpoint.CONF_KEY, dir.getAbsolutePath)
+      val (cpR, nR) = Checkpoint.ofCounted(df)
+      assert(nR == nL)
+      assert(Option(dir.listFiles()).exists(_.nonEmpty),
+        "reliable mode writes the checkpoint dir")
+      assert(cpR.collect().toSeq.sortBy(_.getLong(0)) ==
+        cpL.collect().toSeq.sortBy(_.getLong(0)))
+    } finally {
+      spark.conf.unset(Checkpoint.CONF_KEY)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
   test("a changed checkpoint dir conf re-points reliable checkpoints " +
       "mid-session") {
     import org.apache.spark.sql.functions.col

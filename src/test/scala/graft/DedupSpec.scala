@@ -1,5 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.types._
+
 /** Cross-checks between the dedup pipelines (the SQL-expressible ones are
   * additionally oracle-gated by the driver).
   */
@@ -404,5 +413,133 @@ class DedupSpec extends SparkSpec {
       (5000000001L, "h i j k l m n")).toDF("doc_id", "text")
     val out = graft.dedup.Dedup.substringScrub(docs, 6).collect()
     assert(out.length == 2)
+  }
+
+  // ---- connectedComponents: the driver path vs the distributed loop
+  private def edgeFrame(edges: Seq[(Any, Any)],
+      t: DataType = LongType): DataFrame = {
+    val nullable = edges.exists(e => e._1 == null || e._2 == null)
+    spark.createDataFrame(edges.map(e => Row(e._1, e._2)).asJava,
+      StructType(Seq("u", "v").map(StructField(_, t, nullable))))
+  }
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Min-label relaxation to a fixpoint over the non-null edges; null ids
+    * report one (null, null) row, as the Spark loop does.
+    */
+  private def refRows(edges: Seq[(Any, Any)]): Seq[String] = {
+    def id(x: Any) = x.asInstanceOf[Number].longValue
+    val ends = edges.flatMap(e => Seq(e._1, e._2))
+    val pairs = edges.collect {
+      case (u, v) if u != null && v != null => (id(u), id(v)) }
+    var label = ends.filter(_ != null).map(x => id(x) -> id(x)).toMap
+    var changed = true
+    while (changed) {
+      val next = pairs.foldLeft(label) { case (l, (u, v)) =>
+        val m = math.min(l(u), l(v))
+        l.updated(u, m).updated(v, m)
+      }
+      changed = next != label
+      label = next
+    }
+    (label.toSeq.map { case (i, l) => Row(i, l).toString } ++
+      (if (ends.contains(null)) Seq(Row(null, null).toString) else Nil))
+      .sorted
+  }
+
+  /** Both paths over the same edges: identical schema and rows, equal to
+    * the reference. The bound argument forces the path: Long.MaxValue
+    * admits every long frame to the driver, -1 admits none.
+    */
+  private def bothPaths(edges: Seq[(Any, Any)],
+      t: DataType = LongType): Unit = {
+    val e = edgeFrame(edges, t).repartition(3)
+    val onDriver = dedup.Dedup.connectedComponents(e, 25, Long.MaxValue)
+    val loop = dedup.Dedup.connectedComponents(e, 25, -1L)
+    assert(isLocal(onDriver) == (t == LongType),
+      "long ids take the driver path, others the loop")
+    assert(!isLocal(loop))
+    assert(onDriver.schema == loop.schema)
+    assert(loop.schema.forall(_.dataType == t), "id type kept")
+    val rows = sortedRows(loop)
+    assert(sortedRows(onDriver) == rows)
+    assert(rows == refRows(edges))
+  }
+
+  test("connectedComponents: the driver path and the distributed loop " +
+      "return identical rows and schema") {
+    import org.scalacheck.{Gen, Prop}
+    val edge = Gen.zip(Gen.choose(-20L, 20L), Gen.choose(-20L, 20L))
+    val graphs = Gen.choose(0, 40).flatMap(Gen.listOfN(_, edge))
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(8),
+      Prop.forAll(graphs) { g => bothPaths(g); true })
+    assert(res.passed, res.status.toString)
+    // two chains of 250 edges, min id at one end and at the other, in
+    // shuffled row order with mixed orientation
+    val chains = (0 until 250).flatMap { i =>
+      val (a, b) = (i.toLong, i + 1L)
+      Seq(if (i % 2 == 0) (a, b) else (b, a), (2000L - a, 2000L - b))
+    }
+    bothPaths(new scala.util.Random(7).shuffle(chains))
+    // a star whose center is not its min
+    bothPaths((0L to 120L).filter(_ != 50L).map(leaf => (50L, leaf)))
+    // duplicate and reversed edges, self-loops
+    bothPaths(Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (4L, 5L),
+      (5L, 5L), (5L, 4L)))
+    // negative ids and ids at both ends of the long range
+    bothPaths(Seq((-5L, Long.MaxValue), (Long.MaxValue - 1, 7L),
+      (Long.MinValue, -5L), (Long.MaxValue, Long.MaxValue - 1),
+      (-1L, -2L)))
+    // null endpoints join nothing
+    bothPaths(Seq((null, 3L), (null, null), (4L, null), (3L, 9L)))
+    bothPaths(Seq.empty)
+    bothPaths(Seq((3, 1), (1, 2), (7, 6), (-4, 6)), IntegerType)
+  }
+
+  test("connectedComponents bound edge: bound rows take the driver path " +
+      "in <= 2 jobs, bound + 1 rows the loop with one edge evaluation") {
+    val bound = 64
+    val rnd = new scala.util.Random(11)
+    val raw = Seq.fill(bound + 1)(
+      (rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+    def materialized(n: Int) =
+      Checkpoint.of(edgeFrame(raw.take(n)).repartition(4))
+    val atBound = materialized(bound)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Shim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val onDriver = try {
+      val df = dedup.Dedup.connectedComponents(atBound, 25, bound)
+      df.collect()
+      Shim.waitListeners(spark)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(isLocal(onDriver))
+    assert(jobs.get <= 2, s"driver path ran ${jobs.get} jobs")
+    assert(sortedRows(onDriver) ==
+      sortedRows(dedup.Dedup.connectedComponents(atBound, 25, -1L)))
+    // one row over the bound: the loop, and the edge lineage runs once
+    val evals = spark.sparkContext.longAccumulator
+    val tick = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val over = materialized(bound + 1)
+    val loop = dedup.Dedup.connectedComponents(
+      over.select(tick(col("u")).as("u"), col("v")), 25, bound)
+    assert(!isLocal(loop))
+    val rows = sortedRows(loop)
+    assert(evals.value == bound + 1,
+      s"edge lineage evaluated ${evals.value} rows for ${bound + 1}")
+    assert(rows == sortedRows(
+      dedup.Dedup.connectedComponents(over, 25, Long.MaxValue)))
+    assert(rows == refRows(raw))
   }
 }
