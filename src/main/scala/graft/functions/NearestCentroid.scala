@@ -44,52 +44,19 @@ case class NearestCentroid(left: Expression, right: Expression)
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
     val cents = b.asInstanceOf[ArrayData]
-    val dim = v.numElements()
-    val vv = new Array[Double](dim)
-    var na = 0.0
-    var i = 0
-    while (i < dim) {
-      val x = v.getDouble(i)
-      vv(i) = x
-      na += x * x
-      i += 1
-    }
-    var best = -2.0
-    var bestId = Long.MaxValue
-    var nanChosen = false
-    var j = 0
     val k = cents.numElements()
-    if (k == 0) throw new IllegalArgumentException(
-      s"$prettyName: empty codebook")
+    val ids = new Array[Long](k)
+    val cvs = new Array[Array[Double]](k)
+    var j = 0
     while (j < k) {
       val st = cents.getStruct(j, 2)
-      val cv = st.getArray(1)
-      if (cv.numElements() != dim) throw new IllegalArgumentException(
-        s"$prettyName: vector lengths differ ($dim vs ${cv.numElements()})")
-      var dot = 0.0
-      var nb = 0.0
-      i = 0
-      while (i < dim) {
-        val c = cv.getDouble(i)
-        dot += vv(i) * c
-        nb += c * c
-        i += 1
-      }
-      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
-      // a zero-norm side makes cos NaN; both engines' DESC orderings
-      // rank NaN first, so the lowest-cent_id NaN entry must win —
-      // plain `cos > best` would silently skip it
-      if (cos.isNaN) {
-        if (!nanChosen) { bestId = st.getLong(0); nanChosen = true }
-      } else if (!nanChosen && cos > best) {
-        best = cos
-        bestId = st.getLong(0)
-      }
+      ids(j) = st.getLong(0)
+      cvs(j) = st.getArray(1).toDoubleArray()
       j += 1
     }
-    bestId
+    NearestCentroid.nearest(a.asInstanceOf[ArrayData].toDoubleArray(),
+      ids, cvs)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -158,6 +125,61 @@ case class NearestCentroid(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+
+  /** The argmax-cosine scan itself, over plain arrays: `cents(j)` is the
+    * vector of centroid `ids(j)`, scanned in array order with strict `>`
+    * and the NaN-first rule. The interpreted kernel and the driver-side
+    * Lloyd trainer ([[graft.sim.Lloyd]]) both call it, so they cannot
+    * drift; the generated code is the same loop, and KernelSpec pins it
+    * against this function. Returns `Long.MaxValue` when no cosine beats
+    * the −2 floor, as the generated code does.
+    */
+  def nearest(v: Array[Double], ids: Array[Long],
+      cents: Array[Array[Double]]): Long = {
+    val dim = v.length
+    var na = 0.0
+    var i = 0
+    while (i < dim) {
+      na += v(i) * v(i)
+      i += 1
+    }
+    var best = -2.0
+    var bestId = Long.MaxValue
+    var nanChosen = false
+    var j = 0
+    val k = cents.length
+    if (k == 0) throw new IllegalArgumentException(
+      "nearest_centroid: empty codebook")
+    while (j < k) {
+      val cv = cents(j)
+      if (cv.length != dim) throw new IllegalArgumentException(
+        s"nearest_centroid: vector lengths differ ($dim vs ${cv.length})")
+      var dot = 0.0
+      var nb = 0.0
+      i = 0
+      while (i < dim) {
+        val c = cv(i)
+        dot += v(i) * c
+        nb += c * c
+        i += 1
+      }
+      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+      // a zero-norm side makes cos NaN; both engines' DESC orderings
+      // rank NaN first, so the lowest-cent_id NaN entry must win —
+      // plain `cos > best` would silently skip it
+      if (cos.isNaN) {
+        if (!nanChosen) { bestId = ids(j); nanChosen = true }
+      } else if (!nanChosen && cos > best) {
+        best = cos
+        bestId = ids(j)
+      }
+      j += 1
+    }
+    bestId
+  }
 }
 
 /** `nearest_centroids(v, cents, k)` — the k nearest centroid ids by

@@ -1,9 +1,11 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.functions.CosineSim.{cosineSim, dotProduct}
@@ -211,7 +213,9 @@ object Knn {
     * through every iteration and the full pipeline is mirrorable as
     * ground truth.
     *
-    * Scale: one Lloyd iteration = a map-only argmax over the corpus
+    * Scale: up to [[Lloyd.DRIVER_COMPONENTS]] training components the
+    * Lloyd rounds run on the driver from one collect ([[codebook]]).
+    * Above it, one Lloyd iteration = a map-only argmax over the corpus
     * against the broadcast 16-entry codebook (NO corpus shuffle — see
     * [[assign]]) + one thin map-side-combined exchange (64 decimals ×
     * ≤NLIST groups). Lists are hash-partitioned by centroid; probe joins
@@ -337,25 +341,56 @@ object Knn {
       .drop("pos", "cs")
   }
 
-  /** Seeded-sample + Lloyd codebook (16 rows, checkpointed per iteration
-    * so downstream plans see plain attributes, not ITER nested lineages).
+  /** The trained IVF codebook over `e` (`vec_id` long, `v`): (cent_id,
+    * cv) for the ≤ nlistFor(n) centroids that survive ITER Lloyd rounds
+    * from the seeded hash-order sample.
+    *
+    * `e` is materialized and counted in ONE job (the count sizes nlist,
+    * in lockstep with the oracle's COUNT(*) scalar subquery), so a
+    * derived training frame's lineage runs once. Then:
+    *   - at most [[Lloyd.DRIVER_COMPONENTS]] components (n·DIM): one
+    *     more job collects the training set and the rounds run on the
+    *     driver ([[Lloyd]]), returning a LocalRelation with the loop's
+    *     schema — 2 jobs in all;
+    *   - above the bound, or for a frame the driver can't reproduce
+    *     exactly (see [[Lloyd]]): the distributed loop below over the
+    *     materialized frame, checkpointed per round so downstream plans
+    *     see plain attributes, not ITER nested lineages.
+    * Both paths give bit-identical rows and the same schema (LloydSpec).
     */
-  private[graft] def codebook(e: DataFrame): DataFrame = {
-    // nlist adapts to the training corpus (see nlistFor). The count is
-    // a column-pruned scan job per codebook build — cheap next to the
-    // two Lloyd passes it precedes, and it keeps the Spark side in
-    // lockstep with the oracle's COUNT(*) scalar subquery.
-    val nlist = nlistFor(e.count())
-    val hk = conv(substring(md5(col("vec_id").cast("string")), 1, 15),
-      16, 10).cast("long")
+  private[graft] def codebook(e: DataFrame): DataFrame =
+    codebook(e, Lloyd.DRIVER_COMPONENTS)
+
+  /** `driverComponents` is LloydSpec's seam for forcing either path. */
+  private[graft] def codebook(e: DataFrame,
+      driverComponents: Long): DataFrame = {
+    val (cp, n) = Lloyd.materialize(e)
+    val nlist = nlistFor(n)
+    Lloyd.collect(cp, n, DIM, driverComponents)
+      .flatMap(Lloyd.train(_, nlist, 1, ITER))
+      .map { subs =>
+        val (ids, cvs) = subs.head
+        // the loop's schema: cent_id is the kernel's output, nullable
+        // iff `v` is
+        cp.sparkSession.createDataFrame(
+          ids.indices.map(j => Row(ids(j), cvs(j).toSeq)).asJava,
+          StructType(Seq(
+            StructField("cent_id", LongType, cp.schema("v").nullable),
+            Lloyd.cvField)))
+      }
+      .getOrElse(lloyd(cp, nlist))
+  }
+
+  /** The distributed Lloyd loop of [[codebook]], checkpointed per step. */
+  private def lloyd(e: DataFrame, nlist: Int): DataFrame = {
     val seeds = e
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), hk.as("hk"))
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
+        Lloyd.seedKey(col("vec_id")).as("hk"))
       .orderBy("hk", "cent_id").limit(nlist).drop("hk")
       .transform(graft.Checkpoint.of)
     (1 to ITER).foldLeft(seeds) { (cents, _) =>
       val sums = (0 until DIM).map(i =>
-        sum(round(element_at(col("v"), i + 1), 6)
-          .cast(DecimalType(38, 6))).as(s"s$i"))
+        sum(Lloyd.rounded(element_at(col("v"), i + 1))).as(s"s$i"))
       assign(e, cents).groupBy("cent_id")
         .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
         .select(col("cent_id"), array((0 until DIM).map(i =>

@@ -1,9 +1,11 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.functions.CosineSim.{cosineSim, dotProduct}
@@ -46,8 +48,11 @@ import graft.functions.CosineSim.{cosineSim, dotProduct}
   * default: the re-rank cost is a CONSTANT per query (50 float
   * vectors), not a corpus fraction.
   *
-  * Scale shape: training touches the corpus 2·M times but exchanges
-  * only KSUB-row centroid tables; encoding is map-side (M kernel calls
+  * Scale shape: training materializes the corpus once; up to
+  * [[Lloyd.DRIVER_COMPONENTS]] components it then trains on the driver
+  * from one collect, and above that each of the 2 Lloyd rounds is one
+  * pass over the M-exploded corpus exchanging only KSUB-row centroid
+  * tables per subspace; encoding is map-side (M kernel calls
   * against 4 one-row broadcast codebooks, zero exchange); the ADC scan
   * broadcasts |Q| rows of (query_id, 4 LUT arrays) against the THIN
   * codes table — the corpus's float vectors are never read by the
@@ -78,24 +83,53 @@ object Pq {
   private def sub(m: Int, v: Column): Column = slice(v, m * SD + 1, SD)
 
   /** Train ALL M sub-codebooks jointly; output (m, code 1..≤KSUB dense
-    * LONG, cv). One Lloyd chain keyed by (m, cent_id) instead of M
-    * sequential per-subspace chains: the corpus explodes once to
-    * (vec_id, m, sv) rows and every round is ONE assignment + ONE
-    * grouped mean job covering all subspaces — M× fewer Spark jobs and
-    * checkpoint barriers for byte-identical per-subspace arithmetic
-    * (the seed set, the kernel's per-m sorted centroid array, the
-    * DECIMAL(38,6) sums per (m, cent_id), and the per-m dense-rank
-    * codes are each exactly what the sequential chain computed).
+    * LONG, cv). The training frame is materialized and counted in ONE
+    * job; at most [[Lloyd.DRIVER_COMPONENTS]] components (n·M·SD) train
+    * on the driver ([[Lloyd]], one more job), returning a LocalRelation
+    * with the loop's schema in which `code` is the rank of the surviving
+    * cent_id within its subspace. Larger frames, and frames the driver
+    * can't reproduce exactly, take the loop below over the materialized
+    * frame; LloydSpec pins both paths to the same rows and schema.
     */
-  private def subCodebooks(e: DataFrame): DataFrame = {
+  private[graft] def subCodebooks(e: DataFrame): DataFrame =
+    subCodebooks(e, Lloyd.DRIVER_COMPONENTS)
+
+  /** `driverComponents` is LloydSpec's seam for forcing either path. */
+  private[graft] def subCodebooks(e: DataFrame,
+      driverComponents: Long): DataFrame = {
+    val (cp, n) = Lloyd.materialize(e)
+    Lloyd.collect(cp, n, M * SD, driverComponents)
+      .flatMap(Lloyd.train(_, KSUB, M, ITER))
+      .map { subs =>
+        val rows = subs.zipWithIndex.flatMap { case ((ids, cvs), m) =>
+          ids.indices.map(j => Row(m, j + 1L, cvs(j).toSeq))
+        }
+        // the loop's schema: m and code are never null
+        cp.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+          StructField("m", IntegerType, nullable = false),
+          StructField("code", LongType, nullable = false), Lloyd.cvField)))
+      }
+      .getOrElse(subLloyd(cp))
+  }
+
+  /** The distributed loop of [[subCodebooks]]: one Lloyd chain keyed by
+    * (m, cent_id) instead of M sequential per-subspace chains. The
+    * corpus explodes once to (vec_id, m, sv) rows and every round is
+    * ONE assignment + ONE grouped mean job covering all subspaces — M×
+    * fewer Spark jobs and checkpoint barriers for byte-identical
+    * per-subspace arithmetic (the seed set, the kernel's per-m sorted
+    * centroid array, the DECIMAL(38,6) sums per (m, cent_id), and the
+    * per-m dense-rank codes are each exactly what the sequential chain
+    * computed).
+    */
+  private def subLloyd(e: DataFrame): DataFrame = {
     val sve = e.select(col("vec_id"), explode(array((0 until M).map(m =>
         struct(lit(m).as("m"), sub(m, col("v")).as("sv"))): _*)).as("x"))
       .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-    val hk = conv(substring(md5(col("vec_id").cast("string")), 1, 15),
-      16, 10).cast("long")
     // the seed ROWS are the same md5-ordered vec_ids in every subspace —
     // one corpus sort-limit, joined back to the m-exploded slices
-    val seedIds = e.select(col("vec_id"), hk.as("hk"))
+    val seedIds = e
+      .select(col("vec_id"), Lloyd.seedKey(col("vec_id")).as("hk"))
       .orderBy("hk", "vec_id").limit(KSUB).select("vec_id")
     val seeds = sve.join(seedIds, "vec_id")
       .select(col("m"), col("vec_id").as("cent_id"), col("sv").as("cv"))
@@ -104,8 +138,7 @@ object Pq {
       val centArr = cents.groupBy("m").agg(
         array_sort(collect_list(struct(col("cent_id"), col("cv")))).as("cs"))
       val sums = (0 until SD).map(i =>
-        sum(round(element_at(col("sv"), i + 1), 6)
-          .cast(DecimalType(38, 6))).as(s"s$i"))
+        sum(Lloyd.rounded(element_at(col("sv"), i + 1))).as(s"s$i"))
       sve.join(broadcast(centArr), "m")
         .withColumn("cent_id", nc(col("sv"), col("cs")))
         .groupBy("m", "cent_id")

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.types._
 
 import graft.functions.{NearestCentroid, NearestCentroids, TokenMatchCount, Tokens, WordShingles}
 
@@ -296,6 +299,38 @@ class KernelSpec extends SparkSpec {
       .select("vec_id", "cent_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(kernel == window)
+  }
+
+  test("NearestCentroid: codegen path == the shared scan " +
+      "NearestCentroid.nearest, which the interpreted path calls") {
+    val e = Tables(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val cents = e.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+    val (ids, cvs) = (cents.map(_._1), cents.map(_._2))
+    val viaSql = sim.Knn.assign(e, e.filter(col("vec_id") < 16)
+        .select(col("vec_id").as("cent_id"), col("v").as("cv")))
+      .select("vec_id", "cent_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val vecs = e.collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
+    assert(viaSql == vecs.map { case (id, v) =>
+      id -> NearestCentroid.nearest(v.toArray, ids, cvs) }.toMap)
+    // interpreted eval on a zero vector (NaN first) and an exact tie
+    // (ids 3 and 7 at equal cosine: the lower id wins)
+    val cs = Literal.create(
+      Seq(Row(3L, Seq(1.0, 0.0)), Row(7L, Seq(0.0, 1.0))),
+      ArrayType(StructType(Seq(StructField("cent_id", LongType, false),
+        StructField("cv", ArrayType(DoubleType, false), false))), false))
+    for ((v, want) <- Seq(Seq(0.0, 0.0) -> 3L, Seq(1.0, 1.0) -> 3L,
+        Seq(0.1, 2.0) -> 7L)) {
+      val interpreted = NearestCentroid(
+        Literal.create(v, ArrayType(DoubleType, false)), cs).eval()
+      assert(interpreted == want)
+      assert(NearestCentroid.nearest(v.toArray, Array(3L, 7L),
+        Array(Array(1.0, 0.0), Array(0.0, 1.0))) == want)
+    }
   }
 
   test("TriProducts kernel == nested transform upper-triangle composition") {
