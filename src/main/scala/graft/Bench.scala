@@ -109,50 +109,21 @@ object Bench {
         spark.read.parquet(s"$sfDir/$t.parquet")
           .write.format("noop").mode("overwrite").save()
     }
-    // session-cached ARTIFACT builds are one-time init too: untimed
-    // here, or the build lands on whichever cache consumer the query
-    // Map order runs first — in a REPS=1 sweep that query records
-    // build+query as its "time" (r14's sf1 sweep charged the whole
-    // ~113 s graph build to knn_graph_search, whose walk is ~4 s).
-    // With REPS>=3 the median already excluded it; this makes every
-    // rep measure the steady-state read path the *_persisted queries
-    // are defined as. Under a SPARK_GRAFT_BENCH_ONLY subset, a hook
-    // runs only if the subset contains one of its consumers — an
-    // artifact-free subset sweep must not pay every build (the sf1
-    // graph build alone is ~113 s, eaten out of the round window the
-    // ONLY knob exists to fit). Full runs (the driver's) prime all.
-    primeHooks.foreach { case (consumers, hook) =>
-      if (only.forall(sub => consumers.exists(sub.contains)))
-        hook(spark, sfDir)
-    }
   }
 
-  /** Each session-cached artifact build hook with the GATED QUERIES
-    * that read it (the steady-state consumers whose timing the prime
-    * protects). BenchSpec pins every name to SparkEntry.queries so a
-    * renamed query can't silently orphan its hook.
+  /** Run one rep. A rep during which [[Artifacts]] built something paid
+    * a one-time build, so it is run again and only the re-run is
+    * returned: every recorded rep measures the steady-state read path
+    * the *_persisted queries are defined as, under full runs and
+    * SPARK_GRAFT_BENCH_ONLY subsets alike (a REPS=1 sf1 sweep once
+    * charged the whole ~113 s graph build to knn_graph_search, whose
+    * walk is ~4 s).
     */
-  private[graft] val primeHooks
-      : Seq[(Set[String], (SparkSession, String) => Unit)] = Seq(
-    (Set("knn_ivf_persisted", "knn_graph_search",
-      "graph_pagerank_persisted", "graph_labelprop", "graph_embeddedness",
-      "graph_nndescent", "graph_triangles_persisted",
-      "graph_linkpred_persisted", "graph_components_persisted",
-      "graph_components_incremental", "graph_components_takedown"),
-      (s, d) => graft.sim.Knn.prime(s, d)),
-    (Set("knn_ivfpq_persisted"), (s, d) => graft.sim.Pq.prime(s, d)),
-    (Set("dedup_clusters_persisted", "dedup_clusters_incremental",
-      "dedup_clusters_compacted", "dedup_clusters_takedown",
-      "dedup_keep_best_persisted", "dedup_weights_persisted",
-      "dedup_lexsem_persisted", "sample_split_dedup_persisted"),
-      (s, d) => graft.dedup.DedupState.prime(s, d)),
-    (Set("text_search", "text_search_ranked", "text_search_phrase",
-      "text_search_phrase_pos"),
-      (s, d) => graft.text.TextIndex.prime(s, d)),
-    (Set("pipeline_prepare_clustered_persisted"),
-      (s, d) => graft.text.Pipelines.prime(s, d)),
-    (Set("mm_embed_dedup_persisted"),
-      (s, d) => graft.multimodal.EmbedState.prime(s, d)))
+  private[graft] def steadyRep[A](rep: () => A): A = {
+    val builds = Artifacts.totalBuilds
+    val first = rep()
+    if (Artifacts.totalBuilds == builds) first else rep()
+  }
 
   /** Optional query subset (`SPARK_GRAFT_BENCH_ONLY=q1,q2,...`) — the
     * top-N-by-cost subset sweep knob (running 247 queries at sf3+ would
@@ -191,18 +162,22 @@ object Bench {
       .map { case (name, fn) =>
       val gcs = scala.collection.mutable.ArrayBuffer.empty[Long]
       def rep(): Double = {
-        val t0 = System.nanoTime()
-        val g0 = gcMs()
-        // noop sink materializes every output column (count() would let
-        // Catalyst prune projections out of the measured plan).
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          errors.getOrElseUpdate(name,
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+        val (secs, gc) = steadyRep { () =>
+          val t0 = System.nanoTime()
+          val g0 = gcMs()
+          // noop sink materializes every output column (count() would
+          // let Catalyst prune projections out of the measured plan).
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            errors.getOrElseUpdate(name,
+              Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+          }
+          ((System.nanoTime() - t0) / 1e9, gcMs() - g0)
         }
-        gcs += gcMs() - g0
-        (System.nanoTime() - t0) / 1e9
+        gcs += gc
+        secs
       }
       val times = scala.collection.mutable.ArrayBuffer.fill(REPS)(rep())
       var extra = 0
@@ -250,26 +225,6 @@ object Bench {
       .mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // repo-owned scratch dir: /tmp cleaners killed the driver's r7 bench
-    // 40 minutes in by deleting shuffle temp files under /tmp/spark-local
-    val localDir = new java.io.File("target/spark-local")
-    localDir.mkdirs()
-    // SPARK_GRAFT_MASTER / SPARK_GRAFT_APP_JAR / SPARK_GRAFT_CHECKPOINT_DIR:
-    // the same non-local smoke wiring as Verify (local-cluster needs the
-    // app shipped as a JAR and the driver classpath handed to the bare
-    // worker JVMs — the r15 SerializedLambda rule)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // the r15 SerializedLambda rule: a bare classes dir on the executor
-    // classpath deserializes closures in a different classloader and
-    // every closure-bearing stage dies — fail HERE with the fix named,
-    // not 40 minutes in with a ClassCastException
-    if (master.startsWith("local-cluster"))
-      require(sys.env.contains("SPARK_GRAFT_APP_JAR"),
-        "SPARK_GRAFT_MASTER=local-cluster requires SPARK_GRAFT_APP_JAR " +
-          "(the app shipped as a JAR via spark.jars; also export " +
-          "SPARK_SCALA_VERSION=2.13) — see Verify's contract")
     if (sys.env.get("SPARK_GRAFT_REQUIRE_QUIET").contains("1")) {
       val l = loadavg()
       if (!quietLoad(l)) {
@@ -278,22 +233,7 @@ object Bench {
         sys.exit(2)
       }
     }
-    val b0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDir.getAbsolutePath)
-    val b1 = if (master.startsWith("local-cluster")) {
-      val cp = b0.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      sys.env.get("SPARK_GRAFT_APP_JAR").fold(cp)(j =>
-        cp.config("spark.jars", j))
-    } else b0
-    val spark = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .fold(b1)(d => b1.config("spark.graft.checkpointDir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.tune(spark)
+    val spark = Sessions.fromEnv()
     sys.env.get("SPARK_GRAFT_SF_SWEEP") match {
       case Some(dirs) => sweep(spark, dirs.split(",").map(_.trim).toSeq)
       case None => single(spark,

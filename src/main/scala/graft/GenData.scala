@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-owned scale-up generator: synthesize an sfN corpus from the
@@ -80,18 +80,7 @@ object GenData {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/gendata/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val localDir = new java.io.File("target/spark-local")
-    localDir.mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDir.getAbsolutePath)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.tune(spark)
+    val spark = Sessions.fromEnv()
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String, files: Int): Unit = {

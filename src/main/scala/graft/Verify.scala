@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,32 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_MASTER: non-local-master smoke path (e.g.
-    // "local-cluster[2,2,2048]" — real worker JVMs, real executor
-    // classpaths/serialization); SPARK_GRAFT_CHECKPOINT_DIR flips
-    // graft.Checkpoint into reliable mode (shared-storage posture).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b1 = if (master.startsWith("local-cluster")) {
-      // worker JVMs are spawned bare: hand them the driver's classpath,
-      // and ship the app as a JAR (SPARK_GRAFT_APP_JAR) — a bare
-      // classes directory triggers the SerializedLambda classloader
-      // mismatch on any closure-bearing stage
-      val cp = b0.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      sys.env.get("SPARK_GRAFT_APP_JAR").fold(cp)(j =>
-        cp.config("spark.jars", j))
-    } else b0
-    val spark = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .fold(b1)(d => b1.config("spark.graft.checkpointDir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

@@ -51,21 +51,6 @@ object Tables {
   }
 }
 
-/** Root directory for persisted index/state artifacts (IVF index, kNN
-  * graph, dedup pair/label state): `spark.graft.indexDir` when set (a
-  * cluster points it at shared object storage), else the checkpoint dir
-  * (both already point at shared storage, so the persisted posture is
-  * real, not driver-local), else the JVM temp dir. Always a FIXED
-  * location per corpus (overwritten on rebuild, never accumulated).
-  */
-object Indexes {
-  def root(s: SparkSession): String =
-    s.conf.getOption("spark.graft.indexDir")
-      .orElse(s.conf.getOption(Checkpoint.CONF_KEY))
-      .filter(_.nonEmpty)
-      .getOrElse(sys.props("java.io.tmpdir"))
-}
-
 /** Determinism helpers — see SURVEY.md §5.
   *
   * Double aggregation is partition-order dependent at the last few bits, so

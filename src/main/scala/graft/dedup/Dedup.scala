@@ -2098,8 +2098,8 @@ object Dedup {
     * ingest; policies are cheap joins over the thin tables). Results
     * are identical to the derive-in-query twins by construction, so
     * each is gated by the SAME oracle verbatim (the
-    * graph_*_persisted precedent). The builtIndexes fresh-JVM cache
-    * contract applies (CLAUDE.md / SURVEY §5).
+    * graph_*_persisted precedent). The state is built once per corpus
+    * fingerprint ([[graft.Artifacts.cached]]).
     */
   private val clustersPersisted = Q(
     "dedup_clusters_persisted",

@@ -36,7 +36,6 @@ object MinhashIndex {
       perms: Int = Dedup.PERMS, bands: Int = Dedup.BANDS): Unit = {
     Dedup.bandBuckets(docs, perms, bands)
       .write.mode("overwrite").parquet(s"$path/buckets")
-    buildCount += 1
   }
 
   /** Append a new slice's buckets to an existing index (run AFTER
@@ -80,7 +79,4 @@ object MinhashIndex {
         col("candidate_of").isNotNull.as("is_candidate"),
         col("candidate_of"))
   }
-
-  /** Build count since JVM start — spec hook. */
-  private[graft] var buildCount = 0
 }

@@ -170,20 +170,31 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  private val fns
-      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", classOf[CosineSim],
+  private def fn(name: String, cls: Class[_],
+      builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** The functions graft adds, as (identifier, info, builder) triples — the
+    * runtime registration below and [[GraftExtensions]] share them.
+    */
+  private[functions] val fns = Seq(
+    fn("cosine_sim", classOf[CosineSim],
       exprs => CosineSim(exprs(0), exprs(1))),
-    ("dot_product", classOf[DotProduct],
+    fn("dot_product", classOf[DotProduct],
       exprs => DotProduct(exprs(0), exprs(1))))
 
-  /** Idempotent runtime registration (works on driver-created sessions). */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, cls, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder)
+  /** Idempotent runtime registration (works on sessions built without
+    * the extensions): a function already in THIS session's registry is
+    * left alone, so a repeated `SparkEntry.tune` neither re-registers
+    * nor logs Spark's "replaced a previously registered function" WARN,
+    * while a `newSession()` (its own registry) still gets the functions.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    fns.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
+  }
 
   /** Column-API sugar once registered. */
   def cosineSim(a: Column, b: Column): Column =
@@ -198,14 +209,7 @@ object CosineSim {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
+    CosineSim.fns.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PruneAsofJoinRight)
   }

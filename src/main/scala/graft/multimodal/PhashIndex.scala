@@ -45,7 +45,6 @@ object PhashIndex {
     */
   def build(hashes: DataFrame, path: String, bands: Int = BANDS): Unit = {
     bandRows(hashes, bands).write.mode("overwrite").parquet(s"$path/bands")
-    buildCount += 1
   }
 
   /** Append a new slice's banded hashes (run AFTER checking the slice, so
@@ -91,7 +90,4 @@ object PhashIndex {
         col("neardup_of").isNotNull.as("is_neardup"),
         col("neardup_of"))
   }
-
-  /** Build count since JVM start — spec hook. */
-  private[graft] var buildCount = 0
 }

@@ -2,34 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's prime hooks are gated by their CONSUMER query names under a
-  * SPARK_GRAFT_BENCH_ONLY subset — a renamed/removed query must not
-  * silently orphan its hook (the hook would then never run for a
-  * subset naming the renamed consumer, re-creating the r14 build-cost
-  * misattribution this gating exists to prevent).
+/** Bench's declared-quadratic ceilings name real queries (Bench's
+  * build-discarding rep is covered in ArtifactsSpec).
   */
 class BenchSpec extends AnyFunSuite {
-
-  test("every prime-hook consumer name is a real SparkEntry query") {
-    val known = SparkEntry.queries.keySet
-    for ((consumers, _) <- Bench.primeHooks; name <- consumers)
-      assert(known.contains(name),
-        s"prime hook names unknown query '$name' — renamed or removed?")
-  }
-
-  test("prime hooks cover every *_persisted / artifact-cache query") {
-    // the artifact-reading families by naming convention; a new
-    // *_persisted query must be added to a hook's consumer set (or
-    // its build cost lands on its own first timed rep under ONLY)
-    val primed = Bench.primeHooks.flatMap(_._1).toSet
-    val artifactish = SparkEntry.queries.keySet.filter(n =>
-      n.endsWith("_persisted") || n.endsWith("_incremental") ||
-        n.endsWith("_compacted") || n.endsWith("_takedown") ||
-        n.startsWith("text_search"))
-    val missing = artifactish -- primed
-    assert(missing.isEmpty,
-      s"artifact-cache queries with no prime hook: $missing")
-  }
 
   test("every declared-quadratic skip names a real SparkEntry query") {
     // a renamed query must not leave a stale ceiling entry: the skip

@@ -23,15 +23,15 @@ class DedupStateSpec extends SparkSpec {
       val want = SparkEntry.queries(t)(spark, sfDir).collect().toSeq
       assert(got == want, s"$p must answer exactly like $t")
     }
-    val pairBuilds = graft.dedup.DedupState.buildCount
-    val dropBuilds = graft.text.Pipelines.dropsBuildCount
+    val pairBuilds = Artifacts.builds("dedupstate")
+    val dropBuilds = Artifacts.builds("pipelinedrops")
     assert(pairBuilds >= 1 && dropBuilds >= 1,
       "first queries must have built the artifacts")
     SparkEntry.queries("dedup_weights_persisted")(spark, sfDir).collect()
     SparkEntry.queries("pipeline_prepare_clustered_persisted")(
       spark, sfDir).collect()
-    assert(graft.dedup.DedupState.buildCount == pairBuilds &&
-      graft.text.Pipelines.dropsBuildCount == dropBuilds,
+    assert(Artifacts.builds("dedupstate") == pairBuilds &&
+      Artifacts.builds("pipelinedrops") == dropBuilds,
       "subsequent queries must NOT rebuild the stored state")
   }
 

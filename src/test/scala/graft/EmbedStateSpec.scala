@@ -24,9 +24,10 @@ class EmbedStateSpec extends SparkSpec {
       .collect().toSeq
     assert(got.nonEmpty && got == want,
       "persisted pairs must equal the derive-in-query tier's")
-    val builds = EmbedState.buildCount
+    val builds = Artifacts.builds("embedstate")
+    assert(builds >= 1, "first query must have built the state")
     SparkEntry.queries("mm_embed_dedup_persisted")(spark, sfDir).collect()
-    assert(EmbedState.buildCount == builds,
+    assert(Artifacts.builds("embedstate") == builds,
       "second query must NOT rebuild the stored state")
   }
 

@@ -229,12 +229,11 @@ class KnnGraphAppendSpec extends SparkSpec {
       spark, sfDir).collect()
     assert(out.length == emb().count(),
       "component report must cover the full corpus")
-    val builds = Knn.graphBuildCount
-    val appends = Knn.graphAppendCount
+    val builds = Artifacts.builds("knngraph-incr")
+    assert(builds >= 1, "first query must have built the artifact")
     SparkEntry.queries("graph_components_incremental")(spark, sfDir)
       .collect()
-    assert(Knn.graphBuildCount == builds &&
-      Knn.graphAppendCount == appends,
+    assert(Artifacts.builds("knngraph-incr") == builds,
       "second invocation must reuse the cached incremental artifact")
   }
 }

@@ -153,11 +153,11 @@ class KnnSpec extends SparkSpec {
 
   test("persisted IVF index builds once per corpus; queries reuse it") {
     SparkEntry.queries("knn_ivf_persisted")(spark, sfDir).collect()
-    val afterFirst = graft.sim.Knn.buildCount
+    val afterFirst = Artifacts.builds("ivf")
     assert(afterFirst >= 1, "first query must have built the index")
     val again = SparkEntry.queries("knn_ivf_persisted")(spark, sfDir)
       .collect()
-    assert(graft.sim.Knn.buildCount == afterFirst,
+    assert(Artifacts.builds("ivf") == afterFirst,
       "second query must NOT rebuild the index")
     assert(again.nonEmpty)
   }
@@ -172,10 +172,10 @@ class KnnSpec extends SparkSpec {
       val want = SparkEntry.queries(t)(spark, sfDir).collect().toSeq
       assert(got == want, s"$p must answer exactly like $t")
     }
-    val afterFirst = graft.sim.Knn.graphBuildCount
+    val afterFirst = Artifacts.builds("knngraph3")
     assert(afterFirst >= 1, "first query must have built the graph")
     SparkEntry.queries("graph_triangles_persisted")(spark, sfDir).collect()
-    assert(graft.sim.Knn.graphBuildCount == afterFirst,
+    assert(Artifacts.builds("knngraph3") == afterFirst,
       "subsequent queries must NOT rebuild the stored edge list")
   }
 

@@ -30,9 +30,10 @@ class PqIndexSpec extends SparkSpec {
     assert(d.queryExecution.executedPlan.toString
       .contains("dynamicpruning"),
       "the probe broadcast must prune codes partitions at the scan")
-    val builds = Pq.pqBuildCount
+    val builds = Artifacts.builds("ivfpq")
+    assert(builds >= 1, "first query must have built the index")
     SparkEntry.queries("knn_ivfpq_persisted")(spark, sfDir).collect()
-    assert(Pq.pqBuildCount == builds,
+    assert(Artifacts.builds("ivfpq") == builds,
       "second query must NOT rebuild the index")
   }
 

@@ -13,13 +13,13 @@ class TextIndexSpec extends SparkSpec {
       "and reuses one session-cached build") {
     val d = SparkEntry.queries("text_search")(spark, sfDir)
     d.collect() // AQE finalizes the plan; triggers (at most one) build
-    val afterFirst = graft.text.TextIndex.buildCount
+    val afterFirst = Artifacts.builds("text")
     assert(afterFirst >= 1, "first query must have built the index")
     val plan = d.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"),
       "term broadcast must prune pb partitions at the postings scan")
     SparkEntry.queries("text_search")(spark, sfDir).collect()
-    assert(graft.text.TextIndex.buildCount == afterFirst,
+    assert(Artifacts.builds("text") == afterFirst,
       "second query must NOT rebuild the index")
   }
 
