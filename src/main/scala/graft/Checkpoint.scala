@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.DataFrame
 
 /** The materialization barrier every iterative / self-joining stage uses
@@ -18,6 +22,15 @@ import org.apache.spark.sql.DataFrame
   * library to a reliable `checkpoint()` against that directory (HDFS/
   * object store) — the documented 100 TB posture as one config switch,
   * not a rewrite. CheckpointSpec proves results are identical either way.
+  *
+  * Reliable checkpoints are never read by a later application, so none
+  * outlives its own: each `rdd-*` dir lives in a per-application UUID
+  * subdir that `SparkContext.setCheckpointDir` makes, and [[Cleanup]]
+  * removes every such subdir when the context stops. The configured dir
+  * itself stays — [[Artifacts.root]] falls back to it, and artifacts
+  * live there. `Sessions.fromEnv` also turns on Spark's own
+  * `cleanCheckpoints`, which drops an `rdd-*` dir once its RDD is
+  * garbage.
   */
 object Checkpoint {
 
@@ -38,6 +51,34 @@ object Checkpoint {
   private val pointedAt =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
+  // the UUID subdirs made for each application, removed at its end
+  private val subdirs =
+    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+
+  /** Removes the checkpoint subdirs made for application `app` when it
+    * ends (`SparkContext.stop`, which the JVM's shutdown hook also
+    * calls).
+    */
+  private[graft] final class Cleanup(app: String, conf: Configuration)
+      extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+      subdirs.replace(app, Set.empty).foreach(_.foreach { d =>
+        val p = new Path(d)
+        p.getFileSystem(conf).delete(p, true)
+      })
+      // a later checkpoint of this application points at a new subdir
+      pointedAt.remove(app)
+    }
+  }
+
+  private def removeAtStop(sc: SparkContext, subdir: String): Unit =
+    synchronized {
+      val app = sc.applicationId
+      if (!subdirs.contains(app))
+        sc.addSparkListener(new Cleanup(app, sc.hadoopConfiguration))
+      subdirs(app) = subdirs.getOrElse(app, Set.empty) + subdir
+    }
+
   /** Materialize `df` and cut its lineage — reliably when a checkpoint
     * dir is configured, in executor memory otherwise. The returned
     * frame's INHERITED size estimate is capped at Long.Max
@@ -56,6 +97,7 @@ object Checkpoint {
             !pointedAt.get(sc.applicationId).contains(dir)) {
           sc.setCheckpointDir(dir)
           pointedAt(sc.applicationId) = dir
+          removeAtStop(sc, sc.getCheckpointDir.get)
         }
         df.checkpoint()
       case None => df.localCheckpoint()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *   - `SPARK_GRAFT_APP_JAR`: the app shipped as a JAR via `spark.jars`,
   *     required under local-cluster;
   *   - `SPARK_GRAFT_CHECKPOINT_DIR`: flips [[Checkpoint]] into reliable
-  *     mode (the shared-storage posture).
+  *     mode (the shared-storage posture), with checkpoint cleaning on.
   * Shuffle scratch goes to the repo-owned `target/spark-local`: /tmp
   * cleaners have killed a bench 40 minutes in by deleting shuffle temp
   * files under /tmp/spark-local.
@@ -46,8 +46,11 @@ object Sessions {
           System.getProperty("java.class.path"))
         .config("spark.jars", sys.env("SPARK_GRAFT_APP_JAR"))
       else b0
+    // reliable checkpoints: Spark drops an rdd-* dir once its RDD is
+    // garbage, and Checkpoint removes the application's subdir at stop
     val spark = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .fold(b1)(d => b1.config(Checkpoint.CONF_KEY, d))
+      .fold(b1)(d => b1.config(Checkpoint.CONF_KEY, d)
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.tune(spark)

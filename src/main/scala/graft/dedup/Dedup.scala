@@ -118,7 +118,19 @@ object Dedup {
     * [raw double]) with a_id < b_id and jaccard >= tau. Shared by
     * dedup_ngram_jaccard and pipeline_prepare.
     *
-    * Scale: the postings-list join is linear in Σ df². `dfCap` is the
+    * Scale: a shingle table of at most [[ShinglePairs.DRIVER_POSTINGS]]
+    * (2^22) postings ENDS ON THE DRIVER in 2 jobs: one counts the
+    * postings, one collects the (doc_id, sh, nsh) rows — at the bound
+    * 4M shingle strings, which ran in a 1 GB heap — and [[ShinglePairs]]
+    * counts every candidate's exact intersection over in-memory posting
+    * lists (ScanCount), then applies the predicate below. The answer is
+    * a local frame (LocalRelation) with the plan's rows and schema. At
+    * sf1 (2.6M postings) that is 5.6 s against the plan's 54 s; the
+    * timings are on [[ShinglePairs.DRIVER_POSTINGS]]. Larger tables,
+    * answers over [[ShinglePairs.DRIVER_ANSWER_ROWS]] (2^20) rows, and
+    * frames the driver cannot reproduce exactly (see [[ShinglePairs]])
+    * run the distributed plan: the df-capped postings self-join, 8 jobs
+    * at test scale, whose cost is linear in Σ df². `dfCap` is the
     * web-scale guard: shingles with df > cap (boilerplate present in
     * thousands of documents) are dropped from CANDIDATE GENERATION — one
     * viral shingle otherwise contributes df² join rows — and surviving
@@ -167,46 +179,23 @@ object Dedup {
   val DEFAULT_DF_CAP = 1000
 
   def jaccardPairs(shingleTable: DataFrame, tau: Double,
-      dfCap: Option[Int] = Some(DEFAULT_DF_CAP)): DataFrame = {
-    val ex = shingleTable
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("sh"))
-    val kept = dfCap match {
-      case None => ex
-      case Some(cap) =>
-        require(cap >= 2,
-          s"dfCap must be >= 2 to ever pair documents, got $cap")
-        ex.join(ex.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, cap)).select("sh"), "sh")
-    }
-    val a = kept.select(col("doc_id").as("a_id"), col("nsh").as("na"),
-      col("sh"))
-    val b = kept.select(col("doc_id").as("b_id"), col("nsh").as("nb"),
-      col("sh"))
-    val counted = a.join(b, "sh")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "na", "nb")
-      .agg(count(lit(1)).as("inter"))
-    dfCap match {
+      dfCap: Option[Int] = Some(DEFAULT_DF_CAP)): DataFrame =
+    jaccardPairs(shingleTable, tau, dfCap, ShinglePairs.DRIVER_POSTINGS)
+
+  /** `driverPostings` is DedupSpec's seam for forcing either path. */
+  private[graft] def jaccardPairs(shingleTable: DataFrame, tau: Double,
+      dfCap: Option[Int], driverPostings: Long): DataFrame = {
+    dfCap.foreach(cap => require(cap >= 2,
+      s"dfCap must be >= 2 to ever pair documents, got $cap"))
+    val jLow = col("inter").cast("double") /
+      (col("na") + col("nb") - col("inter"))
+    def answer(bracketed: DataFrame): DataFrame = dfCap match {
       case None =>
-        counted
-          .withColumn("jaccard", col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")))
+        bracketed
+          .withColumn("jaccard", jLow)
           .filter(col("jaccard") >= tau)
           .select("a_id", "b_id", "jaccard")
-      case Some(cap) =>
-        // structurally identical to the df aggregate feeding `kept`, so
-        // the planner shares ONE exchange between them (ReusedExchange)
-        val nViral = ex.groupBy("sh").agg(count(lit(1)).as("df"))
-          .agg(coalesce(sum(when(col("df") > cap, 1L).otherwise(0L)),
-            lit(0L)).as("n_viral"))
-        // thin (pair, counts, V) frame consumed by BOTH union branches —
-        // materialize it or each branch re-runs the postings self-join
-        // (the exchanges would be reusable, but AQE's broadcast
-        // conversion breaks that reuse — the dedup_substring lesson)
-        val bracketed = graft.Checkpoint.of(
-          counted.crossJoin(broadcast(nViral)))
-        val jLow = col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter"))
+      case Some(_) =>
         val interHigh = least(col("inter") + col("n_viral"),
           least(col("na"), col("nb")))
         val jHigh = interHigh.cast("double") /
@@ -221,7 +210,85 @@ object Dedup {
         certain.unionByName(
           verifyJaccard(uncertain, shingleTable, tau))
     }
+    lazy val plan = bracketedPairs(shingleTable, dfCap)
+    pairsOnDriver(shingleTable, driverPostings,
+      pairSchema("jaccard", shingleTable, dfCap.isDefined,
+        answer(plan).schema))(
+      ShinglePairs.jaccard(_, dfCap.getOrElse(Int.MaxValue), tau,
+        answerRows(driverPostings)))
+      .getOrElse(answer(
+        if (dfCap.isEmpty) plan else graft.Checkpoint.of(plan)))
   }
+
+  /** The distributed candidate plan of [[jaccardPairs]] and
+    * [[containmentPairs]], unmaterialized: (a_id, b_id, na, nb, inter,
+    * n_viral) for every pair a_id < b_id sharing a kept shingle, with
+    * `inter` its exact count of shared kept shingles and `n_viral` the
+    * number V of distinct shingles over the cap (0 uncapped, where
+    * every shingle is kept). A capped caller materializes it: its
+    * certain and verify branches both read it, and each would otherwise
+    * re-run the postings self-join (the exchanges would be reusable, but
+    * AQE's broadcast conversion breaks that reuse — the dedup_substring
+    * lesson).
+    */
+  private def bracketedPairs(shingleTable: DataFrame,
+      dfCap: Option[Int]): DataFrame = {
+    val ex = shingleTable
+      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("sh"))
+    val df = ex.groupBy("sh").agg(count(lit(1)).as("df"))
+    val kept = dfCap.fold(ex)(cap =>
+      ex.join(df.filter(col("df").between(2, cap)).select("sh"), "sh"))
+    val a = kept.select(col("doc_id").as("a_id"), col("nsh").as("na"),
+      col("sh"))
+    val b = kept.select(col("doc_id").as("b_id"), col("nsh").as("nb"),
+      col("sh"))
+    val counted = a.join(b, "sh")
+      .filter(col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id", "na", "nb")
+      .agg(count(lit(1)).as("inter"))
+    dfCap match {
+      case None => counted.withColumn("n_viral", lit(0L))
+      case Some(cap) =>
+        // the df aggregate feeding `kept` again, so the planner shares
+        // ONE exchange between them (ReusedExchange)
+        counted.crossJoin(broadcast(df.agg(coalesce(
+          sum(when(col("df") > cap, 1L).otherwise(0L)), lit(0L))
+          .as("n_viral"))))
+    }
+  }
+
+  /** The driver's answer bound; a `driverPostings` seam below it lowers
+    * it too, so a test can reach it with a small table.
+    */
+  private def answerRows(driverPostings: Long): Long =
+    math.min(driverPostings, ShinglePairs.DRIVER_ANSWER_ROWS)
+
+  /** The distributed answer's schema per kernel, input schema and cap
+    * shape (τ moves no type or nullability). Building the plan only to
+    * read its schema costs every driver-path call 70–140 ms of eager
+    * Dataset analysis, so each shape is analyzed once per JVM.
+    */
+  private val pairSchemas = scala.collection.concurrent.TrieMap
+    .empty[(String, StructType, Boolean), StructType]
+
+  private def pairSchema(kernel: String, shingleTable: DataFrame,
+      capped: Boolean, analyze: => StructType): StructType =
+    pairSchemas.getOrElseUpdate((kernel, shingleTable.schema, capped),
+      analyze)
+
+  /** A shingle-pair answer computed on the driver: the shingle table
+    * collected ([[ShinglePairs.collect]], ≤ `bound` postings), `kernel`
+    * run over it, and its rows (None past the bound) wrapped in a local
+    * frame with `schema`, the distributed plan's own. None when any
+    * step declines.
+    */
+  private def pairsOnDriver(shingleTable: DataFrame, bound: Long,
+      schema: => StructType)(kernel: ShinglePairs.Postings =>
+        Option[Array[_ <: Product]]): Option[DataFrame] =
+    ShinglePairs.collect(shingleTable, bound).flatMap(kernel).map { rows =>
+      shingleTable.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.map(Row.fromTuple): _*), schema)
+    }
 
   /** Distinct candidate pairs (a_id < b_id) sharing ≥1 shingle with
     * df ≤ cap: postings grouped per shingle (ONE exchange over the
@@ -1890,6 +1957,15 @@ object Dedup {
     * orientations (src_id, dst_id, containment_micro) with
     * floor-millionths `|Ssrc∩Sdst| / |Ssrc| ≥ tauMicro`.
     *
+    * Scale: as [[jaccardPairs]], a table of at most
+    * [[ShinglePairs.DRIVER_POSTINGS]] (2^22) postings ends on the driver
+    * in 2 jobs (the same collect of (doc_id, sh, nsh) rows), with the
+    * answer as a LocalRelation of the distributed plan's rows and
+    * schema; at sf1 5.4 s against the plan's 58 s. Past the bound, past
+    * [[ShinglePairs.DRIVER_ANSWER_ROWS]] (2^20) answer rows, or for a
+    * frame the driver cannot reproduce, the distributed plan below
+    * runs: 11 jobs at test scale.
+    *
     * Same COUNT-based shape as [[jaccardPairs]] (an earlier array-verify
     * form joined both full shingle arrays to every candidate pair —
     * 4× slower at sf0.1): the df-capped postings self-join yields each
@@ -1905,31 +1981,15 @@ object Dedup {
     * boilerplate-only recall edge as [[jaccardPairs]].
     */
   def containmentPairs(shingleTable: DataFrame, tauMicro: Long,
-      dfCap: Int = DEFAULT_DF_CAP): DataFrame = {
+      dfCap: Int = DEFAULT_DF_CAP): DataFrame =
+    containmentPairs(shingleTable, tauMicro, dfCap,
+      ShinglePairs.DRIVER_POSTINGS)
+
+  /** `driverPostings` is DedupSpec's seam for forcing either path. */
+  private[graft] def containmentPairs(shingleTable: DataFrame,
+      tauMicro: Long, dfCap: Int, driverPostings: Long): DataFrame = {
     require(dfCap >= 2,
       s"dfCap must be >= 2 to ever pair documents, got $dfCap")
-    val ex = shingleTable
-      .select(col("doc_id"), col("nsh"), explode(col("sh")).as("sh"))
-    val kept = ex.join(ex.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, dfCap)).select("sh"), "sh")
-    val a = kept.select(col("doc_id").as("a_id"), col("nsh").as("na"),
-      col("sh"))
-    val b = kept.select(col("doc_id").as("b_id"), col("nsh").as("nb"),
-      col("sh"))
-    val counted = a.join(b, "sh")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "na", "nb")
-      .agg(count(lit(1)).cast("long").as("inter"))
-    // structurally identical to the df aggregate feeding `kept` — the
-    // planner shares ONE exchange between them (ReusedExchange)
-    val nViral = ex.groupBy("sh").agg(count(lit(1)).as("df"))
-      .agg(coalesce(sum(when(col("df") > dfCap, 1L).otherwise(0L)),
-        lit(0L)).as("n_viral"))
-    // materialized for the same two-consumer reason as [[jaccardPairs]]'
-    // bracketed frame: certain + verify branches must not each re-run
-    // the postings self-join lineage
-    val bracketed = graft.Checkpoint.of(
-      counted.crossJoin(broadcast(nViral)))
     def orientations(pairs: DataFrame): DataFrame = pairs
       .select(explode(array(
         struct(col("a_id").as("src_id"), col("b_id").as("dst_id"),
@@ -1939,20 +1999,29 @@ object Dedup {
         .as("o"))
       .select(col("o.src_id"), col("o.dst_id"), col("o.containment_micro"))
       .filter(col("containment_micro") >= tauMicro)
-    val certain = orientations(bracketed.filter(col("n_viral") === 0L))
-    val uncertain = bracketed.filter(col("n_viral") > 0L)
-      .withColumn("inter_high",
-        least(col("inter") + col("n_viral"), least(col("na"), col("nb"))))
-      .filter(expr(s"inter_high * 1000000 DIV least(na, nb) >= $tauMicro"))
-      .select("a_id", "b_id")
-    val verified = orientations(uncertain
-      .join(shingleTable.select(col("doc_id").as("a_id"),
-        col("sh").as("sha"), col("nsh").as("na")), "a_id")
-      .join(shingleTable.select(col("doc_id").as("b_id"),
-        col("sh").as("shb"), col("nsh").as("nb")), "b_id")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("long")))
-    certain.unionByName(verified)
+    def answer(bracketed: DataFrame): DataFrame = {
+      val certain = orientations(bracketed.filter(col("n_viral") === 0L))
+      val uncertain = bracketed.filter(col("n_viral") > 0L)
+        .withColumn("inter_high",
+          least(col("inter") + col("n_viral"), least(col("na"), col("nb"))))
+        .filter(expr(s"inter_high * 1000000 DIV least(na, nb) >= $tauMicro"))
+        .select("a_id", "b_id")
+      val verified = orientations(uncertain
+        .join(shingleTable.select(col("doc_id").as("a_id"),
+          col("sh").as("sha"), col("nsh").as("na")), "a_id")
+        .join(shingleTable.select(col("doc_id").as("b_id"),
+          col("sh").as("shb"), col("nsh").as("nb")), "b_id")
+        .withColumn("inter",
+          size(array_intersect(col("sha"), col("shb"))).cast("long")))
+      certain.unionByName(verified)
+    }
+    lazy val plan = bracketedPairs(shingleTable, Some(dfCap))
+    pairsOnDriver(shingleTable, driverPostings,
+      pairSchema("containment", shingleTable, capped = true,
+        answer(plan).schema))(
+      ShinglePairs.containment(_, dfCap, tauMicro,
+        answerRows(driverPostings)))
+      .getOrElse(answer(graft.Checkpoint.of(plan)))
   }
 
   private val containment = Q(

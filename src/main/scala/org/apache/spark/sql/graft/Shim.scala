@@ -66,6 +66,13 @@ object Shim {
   def waitListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Test-only: the listeners of class `T` on the session's live bus
+    * (`findListenersByClass` is private[spark]).
+    */
+  def listeners[T <: org.apache.spark.scheduler.SparkListenerInterface](
+      spark: SparkSession)(implicit ct: scala.reflect.ClassTag[T]): Seq[T] =
+    spark.sparkContext.listenerBus.findListenersByClass[T]().toSeq
+
   /** Test-only doorways into the private[sql] extension build methods, so
     * ExtensionsSpec can exercise the same path the session builder calls.
     */

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
+import org.apache.spark.sql.graft.Shim
+
 /** The reliable-checkpoint switch must be a pure posture change: with
   * `spark.graft.checkpointDir` set, every Checkpoint.of barrier writes
   * to the reliable directory instead of executor memory, and results
@@ -106,6 +109,42 @@ class CheckpointSpec extends SparkSpec {
     } finally {
       spark.conf.unset(Checkpoint.CONF_KEY)
       rm(dirA); rm(dirB)
+    }
+  }
+
+  test("an application's checkpoint subdirs are removed when it ends; " +
+      "the configured dir and the artifacts under it stay") {
+    val dir = Files.createTempDirectory("graft-ckpt-cleanup").toFile
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    }
+    def subdirs = dir.listFiles().toSeq
+      .filter(f => f.isDirectory && !f.getName.startsWith("graft-"))
+    try {
+      spark.conf.set(Checkpoint.CONF_KEY, dir.getAbsolutePath)
+      // Artifacts.root falls back to the checkpoint dir
+      val art = Artifacts.cached("checkpoint-cleanup-probe", spark, sfDir) {
+        path => spark.range(3).write.parquet(path)
+      }
+      assert(art.contains(dir.getAbsolutePath))
+      Checkpoint.of(spark.range(100).toDF()).collect()
+      val made = subdirs
+      assert(made.size == 1 && made.head.listFiles().exists(
+        _.getName.startsWith("rdd-")), "one UUID subdir holding rdd-*")
+      // the stop-time listener, driven with the event stop() posts
+      val cleanups = Shim.listeners[Checkpoint.Cleanup](spark)
+      assert(cleanups.size == 1, "one cleanup listener per application")
+      cleanups.head.onApplicationEnd(
+        SparkListenerApplicationEnd(System.currentTimeMillis()))
+      assert(!made.head.exists(), "the subdir is removed")
+      assert(dir.isDirectory, "the configured dir stays")
+      assert(spark.read.parquet(art).count() == 3, "the artifact stays")
+      // a later checkpoint of the application points at a fresh subdir
+      Checkpoint.of(spark.range(10).toDF()).collect()
+      assert(subdirs.size == 1 && subdirs.head.getName != made.head.getName)
+    } finally {
+      spark.conf.unset(Checkpoint.CONF_KEY)
+      rm(dir)
     }
   }
 

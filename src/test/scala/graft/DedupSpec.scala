@@ -44,17 +44,41 @@ class DedupSpec extends SparkSpec {
     assert(pairSet("dedup_embedding_lsh") == exact)
   }
 
-  test("df-capped jaccard bounds candidates with recall unchanged at TAU") {
+  /** The corpus's (doc_id, sh, nsh) shingle table, materialized. */
+  private lazy val corpusShingles = {
     import org.apache.spark.sql.functions._
-    val shingleTable = Tables(spark, sfDir, "documents")
+    Tables(spark, sfDir, "documents")
       .select(col("doc_id"),
         dedup.Dedup.shingles(col("text"), 3).as("sh"))
       .withColumn("nsh", size(col("sh")))
       .localCheckpoint()
-    def pairs(cap: Option[Int]) =
+  }
+
+  /** A shingle-pair kernel on both paths, forced through its
+    * `driverPostings` seam: Long.MaxValue admits every table the driver
+    * reproduces, -1 admits none. Identical schema and rows; returns the
+    * rows.
+    */
+  private def bothPairPaths(kernel: Long => DataFrame): Seq[String] = {
+    val onDriver = kernel(Long.MaxValue)
+    val planned = kernel(-1L)
+    assert(isLocal(onDriver), "a reproducible table takes the driver path")
+    assert(!isLocal(planned))
+    assert(onDriver.schema == planned.schema)
+    val rows = sortedRows(planned)
+    assert(sortedRows(onDriver) == rows)
+    rows
+  }
+
+  test("df-capped jaccard bounds candidates with recall unchanged at TAU") {
+    val shingleTable = corpusShingles
+    def pairs(cap: Option[Int]) = {
+      bothPairPaths(
+        dedup.Dedup.jaccardPairs(shingleTable, dedup.Dedup.TAU, cap, _))
       dedup.Dedup.jaccardPairs(shingleTable, dedup.Dedup.TAU, cap)
         .select("a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     val uncapped = pairs(None)
     assert(uncapped == exactJaccard, "fixture matches the gated query")
     assert(pairs(Some(dedup.Dedup.DEFAULT_DF_CAP)) == uncapped,
@@ -208,6 +232,122 @@ class DedupSpec extends SparkSpec {
     assert(rows == Set((1L, 2L, 1000000L)),
       "prefix doc contained fully in the long doc, never the reverse, " +
         "and the unrelated doc pairs with nothing")
+    bothPairPaths(dedup.Dedup.containmentPairs(st, dedup.Dedup.CONT_MICRO,
+      dedup.Dedup.DEFAULT_DF_CAP, _))
+    // the corpus on both paths; cap 5 leaves shingles over the cap (V >
+    // 0) and sends bracketed pairs through the full-array verify
+    val all = Seq(dedup.Dedup.DEFAULT_DF_CAP, 50, 5).map(cap =>
+      bothPairPaths(dedup.Dedup.containmentPairs(corpusShingles,
+        dedup.Dedup.CONT_MICRO, cap, _)))
+    assert(all.head.size == cont.size, "the default cap is the query's")
+  }
+
+  // ---- shingle pairs: the driver path vs the distributed plan
+  /** A (doc_id, sh, nsh) frame; `nsh` defaults to size(sh). */
+  private def shingleFrame(rows: Seq[Row], id: DataType = LongType,
+      nullable: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val sch = StructType(Seq(StructField("doc_id", id, nullable),
+      StructField("sh", ArrayType(StringType, nullable), nullable)) ++
+      (if (rows.exists(_.length == 3))
+        Seq(StructField("nsh", IntegerType, nullable)) else Nil))
+    val df = spark.createDataFrame(rows.asJava, sch).repartition(3)
+    if (sch.length == 3) df else df.withColumn("nsh", size(col("sh")))
+  }
+
+  private def jaccardBoth(t: DataFrame, cap: Option[Int]): Seq[String] =
+    bothPairPaths(dedup.Dedup.jaccardPairs(t, dedup.Dedup.TAU, cap, _))
+
+  private def containmentBoth(t: DataFrame, cap: Int): Seq[String] =
+    bothPairPaths(dedup.Dedup.containmentPairs(t, dedup.Dedup.CONT_MICRO,
+      cap, _))
+
+  test("shingle pairs: the driver path and the distributed plan return " +
+      "identical rows and schema on ties, empty sets and ids past 2^31") {
+    def set(xs: String*) = xs.toSeq
+    // jaccard 3/5 = TAU exactly; containment 9/10 = CONT_MICRO exactly
+    val ties = shingleFrame(Seq(
+      Row(1L, set("a", "b", "c", "d")),
+      Row(2L, set("a", "b", "c", "e")),
+      Row(3L, (0 until 10).map(i => s"t$i")),
+      Row(4L, (0 until 9).map(i => s"t$i") :+ "u"),
+      Row(5L, set()),
+      Row(6L, set("a")),
+      Row(7L, set())))
+    val tj = jaccardBoth(ties, None)
+    assert(tj.contains(Row(1L, 2L, 0.6).toString), "the tie at TAU is kept")
+    assert(jaccardBoth(ties, Some(1000)) == tj)
+    val tc = containmentBoth(ties, 1000)
+    assert(tc.contains(Row(3L, 4L, 900000L).toString) &&
+      tc.contains(Row(4L, 3L, 900000L).toString),
+      "the tie at CONT_MICRO is kept both ways")
+    // a shingle over cap 2 (df 3): bracketed pairs verify on full sets
+    assert(jaccardBoth(ties, Some(2)).contains(Row(1L, 2L, 0.6).toString))
+    assert(containmentBoth(ties, 2).contains(Row(3L, 4L, 900000L).toString))
+    // random tables over a small alphabet: many shared shingles, some
+    // over every small cap, ids spread past 2^31, empty sets included
+    val rnd = new scala.util.Random(17)
+    (1 to 3).foreach { _ =>
+      val docs = rnd.shuffle((0 until 30).map(_ * 4L)).take(24).map { i =>
+        val id = if (rnd.nextBoolean()) i else (1L << 33) + i
+        Row(id, rnd.shuffle((0 until 12).map(x => s"w$x"))
+          .take(rnd.nextInt(7)))
+      }
+      val t = shingleFrame(docs)
+      jaccardBoth(t, None)
+      jaccardBoth(t, Some(2))
+      containmentBoth(t, 1000)
+      containmentBoth(t, 3)
+    }
+  }
+
+  test("shingle pairs fall back to the distributed plan for a table past " +
+      "the bound or one the driver cannot reproduce; at the bound the " +
+      "driver path runs 2 jobs") {
+    val dups = (1L to 6L).map(i => Row(i, Seq("x", s"y$i")))
+    val plain = shingleFrame(dups)
+    // 12 postings: the bound admits 12, not 11
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val local = Checkpoint.of(plain)
+    Shim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val atBound = try {
+      val df = dedup.Dedup.jaccardPairs(local, 0.3, Some(1000), 15L)
+      Shim.waitListeners(spark)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(isLocal(atBound))
+    assert(jobs.get == 2, s"driver path ran ${jobs.get} jobs")
+    assert(!isLocal(dedup.Dedup.jaccardPairs(local, 0.3, Some(1000), 11L)))
+    // 15 answer rows at tau 1/3 (30 for containment at 0.5): past a bound
+    // of 12 the answer, not the table, sends it to the plan
+    assert(atBound.count() == 15)
+    assert(!isLocal(dedup.Dedup.jaccardPairs(local, 0.3, Some(1000), 12L)))
+    assert(!isLocal(dedup.Dedup.containmentPairs(local, 500000L, 1000, 12L)))
+    assert(isLocal(dedup.Dedup.containmentPairs(local, 500000L, 1000, 30L)))
+    def planned(t: DataFrame): Unit = {
+      val j = dedup.Dedup.jaccardPairs(t, 0.3, Some(1000), Long.MaxValue)
+      val c = dedup.Dedup.containmentPairs(t, 500000L, 1000, Long.MaxValue)
+      assert(!isLocal(j) && !isLocal(c))
+      j.collect(); c.collect()
+    }
+    val x = Seq("x", "z")
+    planned(shingleFrame(dups.map(r => Row(r.getLong(0).toInt, r(1))),
+      IntegerType))                                          // int doc_id
+    planned(shingleFrame(dups :+ Row(1L, x)))                 // duplicate id
+    planned(shingleFrame(dups :+ Row(null, x), nullable = true))  // null id
+    planned(shingleFrame(dups :+ Row(9L, null), nullable = true)) // null sh
+    planned(shingleFrame(dups.map(r => Row(r(0), r(1), 2)) :+
+      Row(9L, x, null), nullable = true))                     // null nsh
+    planned(shingleFrame(dups :+ Row(9L, Seq("x", null)),
+      nullable = true))                                       // null entry
+    planned(shingleFrame(dups :+ Row(9L, Seq("x", "x"))))     // repeated
+    planned(shingleFrame(dups.map(r => Row(r(0), r(1), 2)) :+
+      Row(9L, x, 3)))                                         // nsh ≠ size
   }
 
   test("keep_best keeps exactly one member per cluster — the longest, " +
