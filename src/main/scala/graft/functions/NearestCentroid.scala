@@ -222,54 +222,20 @@ case class NearestCentroids(left: Expression, right: Expression, k: Int)
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
     val cents = b.asInstanceOf[ArrayData]
-    val dim = v.numElements()
-    val vv = new Array[Double](dim)
-    var na = 0.0
-    var i = 0
-    while (i < dim) {
-      val x = v.getDouble(i)
-      vv(i) = x
-      na += x * x
-      i += 1
-    }
     val n = cents.numElements()
-    if (n == 0) throw new IllegalArgumentException(
-      s"$prettyName: empty codebook")
-    val keys = new Array[Double](k)
-    val ids = new Array[Long](k)
-    var size = 0
+    val ids = new Array[Long](n)
+    val cvs = new Array[Array[Double]](n)
     var j = 0
     while (j < n) {
       val st = cents.getStruct(j, 2)
-      val cv = st.getArray(1)
-      if (cv.numElements() != dim) throw new IllegalArgumentException(
-        s"$prettyName: vector lengths differ ($dim vs ${cv.numElements()})")
-      var dot = 0.0
-      var nb = 0.0
-      i = 0
-      while (i < dim) {
-        val c = cv.getDouble(i)
-        dot += vv(i) * c
-        nb += c * c
-        i += 1
-      }
-      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
-      val key = if (cos.isNaN) Double.PositiveInfinity else cos
-      if (size < k || key > keys(size - 1)) {
-        var p = 0
-        while (p < size && keys(p) >= key) p += 1
-        var q = math.min(size, k - 1)
-        while (q > p) { keys(q) = keys(q - 1); ids(q) = ids(q - 1); q -= 1 }
-        keys(p) = key
-        ids(p) = st.getLong(0)
-        if (size < k) size += 1
-      }
+      ids(j) = st.getLong(0)
+      cvs(j) = st.getArray(1).toDoubleArray()
       j += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(ids, size))
+      NearestCentroids.nearest(a.asInstanceOf[ArrayData].toDoubleArray(),
+        ids, cvs, k))
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -347,4 +313,60 @@ case class NearestCentroids(left: Expression, right: Expression, k: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroids {
+
+  /** The top-k scan itself, over plain arrays: `cents(j)` is the vector
+    * of centroid `ids(j)`, scanned in array order into a k-slot buffer
+    * ordered by cosine DESC (NaN mapped to +Inf, so it ranks first),
+    * each candidate inserted after equal keys. The interpreted kernel
+    * and the driver-side index queries ([[graft.sim.IndexQuery]]) both
+    * call it; the generated code is the same loop, and KernelSpec pins
+    * the two by output. Returns the ≤ k chosen ids in rank order.
+    */
+  def nearest(v: Array[Double], ids: Array[Long],
+      cents: Array[Array[Double]], k: Int): Array[Long] = {
+    val dim = v.length
+    var na = 0.0
+    var i = 0
+    while (i < dim) {
+      na += v(i) * v(i)
+      i += 1
+    }
+    val n = cents.length
+    if (n == 0) throw new IllegalArgumentException(
+      "nearest_centroids: empty codebook")
+    val keys = new Array[Double](k)
+    val top = new Array[Long](k)
+    var size = 0
+    var j = 0
+    while (j < n) {
+      val cv = cents(j)
+      if (cv.length != dim) throw new IllegalArgumentException(
+        s"nearest_centroids: vector lengths differ ($dim vs ${cv.length})")
+      var dot = 0.0
+      var nb = 0.0
+      i = 0
+      while (i < dim) {
+        val c = cv(i)
+        dot += v(i) * c
+        nb += c * c
+        i += 1
+      }
+      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+      val key = if (cos.isNaN) Double.PositiveInfinity else cos
+      if (size < k || key > keys(size - 1)) {
+        var p = 0
+        while (p < size && keys(p) >= key) p += 1
+        var q = math.min(size, k - 1)
+        while (q > p) { keys(q) = keys(q - 1); top(q) = top(q - 1); q -= 1 }
+        keys(p) = key
+        top(p) = ids(j)
+        if (size < k) size += 1
+      }
+      j += 1
+    }
+    java.util.Arrays.copyOf(top, size)
+  }
 }

@@ -231,7 +231,7 @@ object Knn {
     * real clustered embedding corpora the same operator prunes far
     * harder at fixed recall.
     */
-  private[sim] val NPROBE = 8
+  private[graft] val NPROBE = 8
   private val ITER = 2
 
   /** Adaptive codebook size — the r14/r17 pinned-knob quadratic fix.
@@ -605,6 +605,16 @@ object Knn {
     Some(sqlIvf))
 
   // ---------------------------------------------------- knn_ivf_persisted
+  /** The written schemas of the persisted IVF tables, partition columns
+    * typed long. Reading with them skips parquet schema inference (one
+    * Spark job per read) and the int-typed partition columns it infers.
+    */
+  private[graft] val CentsSchema = StructType(Seq(
+    StructField("cent_id", LongType), StructField("cv", ArrayType(DoubleType))))
+  private[graft] val ListsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType)),
+    StructField("cent_id", LongType), StructField("ingest_id", LongType)))
+
   /** Train an IVF index over `e` (`vec_id`, `v: array<double>`) and
     * persist it at `path` — the build-once half of the build-once /
     * query-many shape a production vector store actually runs (knn_ivf
@@ -641,17 +651,14 @@ object Knn {
   private[graft] def requireFreshIds(s: SparkSession, storePath: String,
       slice: DataFrame, ingestId: Long, what: String): Unit = {
     // a store every row of which was taken down has no partition dirs
-    // left to read (deleteFromLists removes emptied directories) — no
-    // prior identities, nothing to clash with
-    val prior = try {
-      s.read.parquet(storePath)
-        .withColumn("ingest_id", col("ingest_id").cast("long"))
-        .filter(col("ingest_id") =!= ingestId)
-        .select("vec_id")
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => return
-    }
+    // left to read (deleteFromLists removes emptied directories): with
+    // the schema given it reads as empty — no prior identities, nothing
+    // to clash with
+    val prior = s.read.schema(StructType(Seq(
+        StructField("vec_id", LongType), StructField("ingest_id", LongType))))
+      .parquet(storePath)
+      .filter(col("ingest_id") =!= ingestId)
+      .select("vec_id")
     val clash = slice.select("vec_id").distinct()
       .join(prior, Seq("vec_id"), "left_semi").limit(1).count()
     require(clash == 0,
@@ -671,7 +678,7 @@ object Knn {
     * construction (each slice's assignment depends only on the frozen
     * codebook — KnnSpec pins append(B1)+append(B2) ≡ append(B1∪B2)),
     * [[queryIvfIndex]] needs no change (lists grow in place; probes and
-    * the DPP read path are codebook-driven), and each append accretes
+    * both read paths are codebook-driven), and each append accretes
     * one file set per list directory —
     * [[graft.sources.Sources.compactParquet]] per `cent_id=` dir is the
     * maintenance pass.
@@ -688,7 +695,7 @@ object Knn {
     // partitions' stale rows in place).
     require(ingestId > 0, s"ingestId must be > 0 (0 = base build), got $ingestId")
     requireFreshIds(s, s"$path/lists", e, ingestId, "appendIvfIndex")
-    val cbook = s.read.parquet(s"$path/cents")
+    val cbook = s.read.schema(CentsSchema).parquet(s"$path/cents")
     assign(e, cbook).withColumn("ingest_id", lit(ingestId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -788,13 +795,12 @@ object Knn {
     * overwrite cannot express "now empty"), so its directory is
     * removed explicitly. Affected-partition and leftover-dir lists are
     * collected — bounded by the removal's cell fan-out, never corpus-
-    * sized (the Sources touched-bucket contract).
+    * sized (the Sources touched-bucket contract). `schema` is the
+    * table's written one (lists or codes).
     */
   private[sim] def deleteFromLists(s: SparkSession, listsPath: String,
-      ids: DataFrame): Seq[Long] = {
-    val lists = s.read.parquet(listsPath)
-      .withColumn("cent_id", col("cent_id").cast("long"))
-      .withColumn("ingest_id", col("ingest_id").cast("long"))
+      schema: StructType, ids: DataFrame): Seq[Long] = {
+    val lists = s.read.schema(schema).parquet(listsPath)
     val aff = lists.join(ids, Seq("vec_id"), "left_semi")
       .select("cent_id", "ingest_id").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -828,14 +834,27 @@ object Knn {
     */
   def removeFromIvfIndex(s: SparkSession, path: String,
       vecIds: DataFrame): Unit = {
-    deleteFromLists(s, s"$path/lists",
+    deleteFromLists(s, s"$path/lists", ListsSchema,
       graft.Checkpoint.of(vecIds.select("vec_id").distinct()))
     ()
   }
 
   /** Query a persisted IVF index: exact top-`k` cosine neighbors of each
     * (`query_id`, `qv`) row of `q` among the `nprobe` nearest inverted
-    * lists. Because cent_id is a partition column of `path/lists` and
+    * lists.
+    *
+    * A batch of at most [[IndexQuery.DRIVER_QUERIES]] queries whose
+    * probed cells hold at most [[IndexQuery.DRIVER_LIST_BYTES]] of
+    * parquet ends on the driver ([[IndexQuery.ivf]]) in 2 jobs: collect
+    * the batch, read the probed cells through a static `cent_id IN (…)`
+    * partition filter. The frozen codebook costs one more job the first
+    * time its files are seen. The size check reads the pruned file
+    * listing and launches no job. The answer is a LocalRelation with the
+    * plan's rows and schema.
+    *
+    * Past either bound, or for a batch the driver can't reproduce (see
+    * [[IndexQuery]]), the distributed plan runs (9 jobs for an 8-query
+    * batch): because cent_id is a partition column of `path/lists` and
     * the probe side joins it through a broadcast, Spark's dynamic
     * partition pruning turns the probe set into a directory filter — a
     * query READS only its nprobe/nlist share of the index from storage
@@ -844,11 +863,23 @@ object Knn {
     * full-index scan per query batch.
     */
   def queryIvfIndex(s: SparkSession, path: String, q: DataFrame,
-      k: Int = K, nprobe: Int = NPROBE): DataFrame = {
-    // partition directory names infer as int — re-cast to long
-    val lists = s.read.parquet(s"$path/lists")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-    val cbook = s.read.parquet(s"$path/cents")
+      k: Int = K, nprobe: Int = NPROBE): DataFrame =
+    queryIvfIndexWith(s, path, q, k, nprobe, IndexQuery.IVF)
+
+  /** `bound` is the specs' seam for forcing either path. */
+  private[graft] def queryIvfIndexWith(s: SparkSession, path: String,
+      q: DataFrame, k: Int, nprobe: Int, bound: IndexQuery.Bound): DataFrame = {
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
+    val cbook = s.read.schema(CentsSchema).parquet(s"$path/cents")
+    lazy val plan = ivfQueryPlan(lists, cbook, q, k, nprobe)
+    IndexQuery.ivf(q, cbook, lists, k, nprobe, bound,
+      IndexQuery.schemaOf(Seq("ivf", q.schema), plan.schema))
+      .getOrElse(plan)
+  }
+
+  /** The distributed plan of [[queryIvfIndex]]. */
+  private def ivfQueryPlan(lists: DataFrame, cbook: DataFrame, q: DataFrame,
+      k: Int, nprobe: Int): DataFrame = {
     val probes = probe(q, cbook, nprobe)
       .select(col("query_id"), col("qv"), col("cent_id"))
     val cand = lists.join(broadcast(probes), "cent_id")
@@ -863,7 +894,7 @@ object Knn {
       .orderBy("query_id", "rank")
   }
 
-  private def cachedIndex(s: SparkSession, dir: String): String =
+  private[graft] def cachedIndex(s: SparkSession, dir: String): String =
     graft.Artifacts.cached("ivf", s, dir)(buildIvfIndex(emb(s, dir), _))
 
   /** IVF as a PERSISTED index — [[buildIvfIndex]] once per corpus
@@ -1843,7 +1874,7 @@ object Knn {
       .select("query_id").distinct()
       .join(qid, Seq("query_id"), "left_anti"))
 
-    val removedCells = deleteFromLists(s, s"$path/lists", ids)
+    val removedCells = deleteFromLists(s, s"$path/lists", ListsSchema, ids)
     val probesKeep = graft.Checkpoint.of(
       s.read.parquet(s"$path/probes")
         .withColumn("cent_id", col("cent_id").cast("long"))

@@ -551,6 +551,18 @@ object Pq {
       .parquet(s"$path/codes")
   }
 
+  /** The written schemas of the persisted IVF-PQ tables beside
+    * [[Knn.CentsSchema]] (the coarse codebook), partition columns typed
+    * long: reads with them skip parquet schema inference.
+    */
+  private[graft] val SubcentsSchema = StructType(Seq(
+    StructField("m", IntegerType), StructField("code", LongType),
+    StructField("cv", ArrayType(DoubleType))))
+  private[graft] val CodesSchema = StructType(
+    StructField("vec_id", LongType) +:
+      (0 until M).map(m => StructField(s"k$m", LongType)) :+
+      StructField("cent_id", LongType) :+ StructField("ingest_id", LongType))
+
   /** Residual-encode an assigned (vec_id, cent_id, v=residual) frame
     * against per-subspace codebook arrays → (vec_id, cent_id, k0..kM).
     */
@@ -573,8 +585,8 @@ object Pq {
     require(ingestId > 0,
       s"ingestId must be > 0 (0 = base build), got $ingestId")
     Knn.requireFreshIds(s, s"$path/codes", e, ingestId, "appendIvfPqIndex")
-    val cents = s.read.parquet(s"$path/cents")
-    val subs = s.read.parquet(s"$path/subcents")
+    val cents = s.read.schema(Knn.CentsSchema).parquet(s"$path/cents")
+    val subs = s.read.schema(SubcentsSchema).parquet(s"$path/subcents")
     val res = Knn.assign(e, cents)
       .join(broadcast(cents), "cent_id")
       .select(col("vec_id"), col("cent_id"),
@@ -598,22 +610,56 @@ object Pq {
     */
   def removeFromIvfPqIndex(s: SparkSession, path: String,
       vecIds: DataFrame): Unit =
-    Knn.deleteFromLists(s, s"$path/codes",
+    Knn.deleteFromLists(s, s"$path/codes", CodesSchema,
       graft.Checkpoint.of(vecIds.select("vec_id").distinct()))
 
   /** Query the persisted index: probe → per-(query, probed-cell)
-    * residual LUTs → ADC over the DPP-pruned codes partitions → exact
-    * re-rank of the top-[[RERANK]] survivors against `vectors`
-    * (vec_id, v — the raw corpus table). Mirrors [[ivfpq]]'s plan with
-    * storage reads replacing the train/encode stages.
+    * residual LUTs → ADC over the probed cells' codes → exact re-rank of
+    * the top-[[RERANK]] survivors against `vectors` (vec_id, v — the raw
+    * corpus table).
+    *
+    * A batch of at most [[IndexQuery.DRIVER_QUERIES]] queries whose
+    * probed cells hold at most [[IndexQuery.DRIVER_CODE_BYTES]] of codes
+    * parquet ends on the driver ([[IndexQuery.ivfPq]]) in 3 jobs:
+    * collect the batch, read the probed cells' codes through a static
+    * `cent_id IN (…)` partition filter, and read the ≤ rerank·|Q|
+    * survivors' vectors. The frozen coarse and sub-codebooks cost one
+    * more job each the first time their files are seen. The size check
+    * reads the pruned file listing and launches no job. The answer is a
+    * LocalRelation with the plan's rows and schema.
+    *
+    * Past either bound, or for a batch the driver can't reproduce, the
+    * distributed plan runs (21 jobs for an 8-query batch): [[ivfpq]]'s
+    * plan with storage reads replacing the train/encode stages, the
+    * probe broadcast DPP-pruning the codes read.
     */
   def queryIvfPqIndex(s: SparkSession, path: String, q: DataFrame,
       vectors: DataFrame, k: Int = K, nprobe: Int = Knn.NPROBE,
-      rerank: Int = RERANK): DataFrame = {
-    val cents = s.read.parquet(s"$path/cents")
-    val cbArrs = cbArraysOf(s.read.parquet(s"$path/subcents"))
-    val codes = s.read.parquet(s"$path/codes")
-      .withColumn("cent_id", col("cent_id").cast("long"))
+      rerank: Int = RERANK): DataFrame =
+    queryIvfPqIndexWith(s, path, q, vectors, k, nprobe, rerank,
+      IndexQuery.IVF_PQ)
+
+  /** `bound` is the specs' seam for forcing either path. */
+  private[graft] def queryIvfPqIndexWith(s: SparkSession, path: String,
+      q: DataFrame, vectors: DataFrame, k: Int, nprobe: Int, rerank: Int,
+      bound: IndexQuery.Bound): DataFrame = {
+    val cents = s.read.schema(Knn.CentsSchema).parquet(s"$path/cents")
+    val subs = s.read.schema(SubcentsSchema).parquet(s"$path/subcents")
+    val codes = s.read.schema(CodesSchema).parquet(s"$path/codes")
+    lazy val plan = ivfPqQueryPlan(cents, subs, codes, q, vectors, k,
+      nprobe, rerank)
+    IndexQuery.ivfPq(q, cents, subs, codes, vectors, k, nprobe, rerank, M,
+      SD, bound,
+      IndexQuery.schemaOf(Seq("ivfpq", q.schema, vectors.schema),
+        plan.schema))
+      .getOrElse(plan)
+  }
+
+  /** The distributed plan of [[queryIvfPqIndex]]. */
+  private def ivfPqQueryPlan(cents: DataFrame, subs: DataFrame,
+      codes: DataFrame, q: DataFrame, vectors: DataFrame, k: Int,
+      nprobe: Int, rerank: Int): DataFrame = {
+    val cbArrs = cbArraysOf(subs)
     val qres = Knn.probe(q, cents, nprobe)
       .join(broadcast(cents), "cent_id")
       .select(col("query_id"), col("cent_id"),

@@ -333,6 +333,73 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  test("NearestCentroids, CosineSim, DotProduct, VecSub: interpreted " +
+      "eval == codegen by raw double bits on random, zero-norm and tied " +
+      "vectors") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import graft.functions.{CosineSim, DotProduct, VecSub}
+    def raw(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    val rnd = new scala.util.Random(7)
+    val dim = 64
+    val base = Seq.fill(12)(Array.fill(dim)(rnd.nextGaussian()))
+    // a zero vector (every cosine NaN), a duplicate of a random one (exact
+    // ties) and a scaled copy (cosine ties, dot products apart)
+    val vecs = base ++ Seq(Array.fill(dim)(0.0), base(3).clone,
+      base(5).map(_ * 4.0))
+    val dt = ArrayType(DoubleType, containsNull = false)
+    val ft = ArrayType(FloatType, containsNull = false)
+    /** Interpreted eval and the generated projection of `e` over one row. */
+    def both(e: Expression, row: InternalRow): (Any, InternalRow) =
+      (e.eval(row), GenerateUnsafeProjection.generate(Seq(e))(row))
+    for (a <- vecs; b <- vecs) {
+      val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(a),
+        UnsafeArrayData.fromPrimitiveArray(b))
+      val (l, r) = (BoundReference(0, dt, true), BoundReference(1, dt, true))
+      for (e <- Seq(CosineSim(l, r), DotProduct(l, r))) {
+        val (interp, gen) = both(e, row)
+        assert(raw(interp.asInstanceOf[Double]) == raw(gen.getDouble(0)),
+          s"${e.prettyName}")
+      }
+      val (interp, gen) = both(VecSub(l, r), row)
+      assert(interp.asInstanceOf[ArrayData].toDoubleArray().map(raw).toSeq ==
+        gen.getArray(0).toDoubleArray().map(raw).toSeq, "vec_sub")
+    }
+    // float inputs widen the same way on both paths
+    for (a <- vecs.take(4); b <- vecs.takeRight(4)) {
+      val row = InternalRow(
+        UnsafeArrayData.fromPrimitiveArray(a.map(_.toFloat)),
+        UnsafeArrayData.fromPrimitiveArray(b))
+      val (l, r) = (BoundReference(0, ft, true), BoundReference(1, dt, true))
+      for (e <- Seq(CosineSim(l, r), DotProduct(l, r))) {
+        val (interp, gen) = both(e, row)
+        assert(raw(interp.asInstanceOf[Double]) == raw(gen.getDouble(0)))
+      }
+      val (interp, gen) = both(VecSub(l, r), row)
+      assert(interp.asInstanceOf[ArrayData].toDoubleArray().map(raw).toSeq ==
+        gen.getArray(0).toDoubleArray().map(raw).toSeq)
+    }
+    // top-k over a codebook holding the zero vector and the ties, ids
+    // ascending as array_sort leaves them
+    val ids = vecs.indices.map(i => 10L * i + 3).toArray
+    val cs = new GenericArrayData(ids.indices.map(j =>
+      InternalRow(ids(j), UnsafeArrayData.fromPrimitiveArray(vecs(j)))))
+    val csType = ArrayType(StructType(Seq(
+      StructField("cent_id", LongType, false), StructField("cv", dt, false))),
+      containsNull = false)
+    for (v <- vecs; k <- Seq(1, 3, vecs.size, vecs.size + 2)) {
+      val e = NearestCentroids(BoundReference(0, dt, true),
+        BoundReference(1, csType, true), k)
+      val (interp, gen) = both(e,
+        InternalRow(UnsafeArrayData.fromPrimitiveArray(v), cs))
+      val want = NearestCentroids.nearest(v, ids, vecs.toArray, k).toSeq
+      assert(interp.asInstanceOf[ArrayData].toLongArray().toSeq == want)
+      assert(gen.getArray(0).toLongArray().toSeq == want)
+    }
+  }
+
   test("TriProducts kernel == nested transform upper-triangle composition") {
     // adversarial: negatives, zeros, a 1-element vector, an empty vector,
     // magnitudes at the micro-unit ceiling

@@ -143,10 +143,17 @@ class KnnSpec extends SparkSpec {
     val want = SparkEntry.queries("knn_ivf")(spark, sfDir).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(got == want, "persisted index must answer exactly like knn_ivf")
-    // the probe set must reach the list scan as a DYNAMIC partition
-    // filter: a query batch reads nprobe/nlist of the index from disk,
-    // not all of it
-    val plan = d.queryExecution.executedPlan.toString
+    // past the driver bound, the probe set must reach the list scan as a
+    // DYNAMIC partition filter: a query batch reads nprobe/nlist of the
+    // index from disk, not all of it
+    val e = Tables(spark, sfDir, "embeddings")
+      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
+    val q = e.filter("vec_id < 10").selectExpr("vec_id as query_id", "v as qv")
+    val fallback = graft.sim.Knn.queryIvfIndexWith(spark,
+      graft.sim.Knn.cachedIndex(spark, sfDir), q, 5, graft.sim.Knn.NPROBE,
+      graft.sim.IndexQuery.PLAN)
+    assert(fallback.collect().toSeq == d.collect().toSeq)
+    val plan = fallback.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"),
       "probe join must dynamically prune cent_id partitions at the scan")
   }
@@ -474,6 +481,39 @@ class KnnSpec extends SparkSpec {
       // idempotent: removing already-gone ids changes nothing
       graft.sim.Knn.removeFromIvfIndex(spark, dir, gone)
       assert(listsOf() == direct)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
+  test("requireFreshIds: a store emptied by takedown holds no prior " +
+      "identities; a live one still rejects a re-used id") {
+    import org.apache.spark.sql.functions._
+    val e = Tables(spark, sfDir, "embeddings")
+      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty")
+      .toString
+    try {
+      graft.sim.Knn.buildIvfIndex(e, dir)
+      graft.sim.Knn.removeFromIvfIndex(spark, dir, e.select("vec_id"))
+      // every partition directory is gone: the store reads as empty
+      assert(spark.read.schema(graft.sim.Knn.ListsSchema)
+        .parquet(s"$dir/lists").count() == 0)
+      graft.sim.Knn.requireFreshIds(spark, s"$dir/lists", e, 1L, "spec")
+      val slice = e.filter(col("vec_id") < 100)
+      graft.sim.Knn.appendIvfIndex(spark, dir, slice, 1L)
+      val q = slice.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      assert(graft.sim.Knn.queryIvfIndex(spark, dir, q).collect()
+        .forall(_.getLong(1) < 100), "only the re-ingested slice answers")
+      val err = intercept[IllegalArgumentException] {
+        graft.sim.Knn.requireFreshIds(spark, s"$dir/lists", slice, 2L,
+          "spec")
+      }
+      assert(err.getMessage.contains("ingestId"))
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

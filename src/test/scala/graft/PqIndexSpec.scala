@@ -27,7 +27,15 @@ class PqIndexSpec extends SparkSpec {
       .collect().toSeq
     assert(got.nonEmpty && got == want,
       "persisted IVFPQ must answer exactly like the trained pipeline")
-    assert(d.queryExecution.executedPlan.toString
+    // past the driver bound, the plan DPP-prunes the codes read
+    val e = emb()
+    val fallback = Pq.queryIvfPqIndexWith(spark,
+      Artifacts.cached("ivfpq", spark, sfDir)(Pq.buildIvfPqIndex(e, _)),
+      e.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("v").as("qv")),
+      e, 5, graft.sim.Knn.NPROBE, 50, graft.sim.IndexQuery.PLAN)
+    assert(fallback.collect().toSeq == got)
+    assert(fallback.queryExecution.executedPlan.toString
       .contains("dynamicpruning"),
       "the probe broadcast must prune codes partitions at the scan")
     val builds = Artifacts.builds("ivfpq")
