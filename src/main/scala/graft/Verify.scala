@@ -13,12 +13,16 @@ object Verify {
     val spark = Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name))
+      if (keep(name)) {
+        val t0 = System.nanoTime()
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+        System.err.println(
+          f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

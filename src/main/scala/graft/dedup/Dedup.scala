@@ -1146,13 +1146,13 @@ object Dedup {
           col("a.old").as("old"))
       // labels strictly decrease, so one surviving row ⇒ not converged.
       // Materialization and the convergence probe share ONE job
-      // (Checkpoint.ofChanged): the probe's scan is the action that
+      // (Checkpoint.ofCounted): the probe's scan is the action that
       // fills the round's checkpoint — halving the per-round action
       // count that floors this loop's cost.
       val (next, changed) =
-        graft.Checkpoint.ofChanged(plan, col("label") < col("old"))
+        graft.Checkpoint.ofCounted(plan, col("label") < col("old"))
       labels = next.select(col("id"), col("label"))
-      converged = !changed
+      converged = changed == 0
       i += 1
     }
     labels

@@ -1,8 +1,6 @@
 package graft.sim
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -199,27 +197,12 @@ object Knn {
     WHERE rank <= $K ORDER BY query_id, rank"""))
 
   // -------------------------------------------------------------- knn_ivf
-  /** IVF coarse quantizer trained in-plan: seeds = the NLIST lowest
-    * (md5(vec_id), vec_id) corpus vectors — a seeded uniform hash-order
-    * sample computable identically in DuckDB — refined by ITER Lloyd
-    * iterations. Queries probe their NPROBE nearest centroids and scan
-    * only those inverted lists.
-    *
-    * Determinism across engines AND partitionings: centroid means are
-    * exact decimal sums of 6-dp-rounded components (order-independent —
-    * a 6-dp double is lossless in DECIMAL(38,6), the [[graft.Exact]]
-    * argument), divided once in IEEE double; assignments break cosine
-    * ties by cent_id. So both engines walk bit-identical centroids
-    * through every iteration and the full pipeline is mirrorable as
-    * ground truth.
-    *
-    * Scale: up to [[Lloyd.DRIVER_COMPONENTS]] training components the
-    * Lloyd rounds run on the driver from one collect ([[codebook]]).
-    * Above it, one Lloyd iteration = a map-only argmax over the corpus
-    * against the broadcast 16-entry codebook (NO corpus shuffle — see
-    * [[assign]]) + one thin map-side-combined exchange (64 decimals ×
-    * ≤NLIST groups). Lists are hash-partitioned by centroid; probe joins
-    * are broadcast; recall tunes with nprobe.
+  /** IVF coarse quantizer trained in-plan by [[Lloyd]] ([[codebook]]);
+    * queries probe their NPROBE nearest centroids and scan only those
+    * inverted lists. The trainer is deterministic across engines and
+    * partitionings, so the full pipeline is mirrorable as ground truth.
+    * Lists are hash-partitioned by centroid; probe joins are broadcast;
+    * recall tunes with nprobe.
     *
     * Honest recall note: this synthetic corpus is isotropic (no cluster
     * structure), the hardest case for IVF — measured recall@5 is 0.82 at
@@ -232,7 +215,6 @@ object Knn {
     * harder at fixed recall.
     */
   private[graft] val NPROBE = 8
-  private val ITER = 2
 
   /** Adaptive codebook size — the r14/r17 pinned-knob quadratic fix.
     * A pinned nlist makes derive-in-query IVF candidate volume
@@ -342,81 +324,21 @@ object Knn {
   }
 
   /** The trained IVF codebook over `e` (`vec_id` long, `v`): (cent_id,
-    * cv) for the ≤ nlistFor(n) centroids that survive ITER Lloyd rounds
-    * from the seeded hash-order sample.
-    *
-    * `e` is materialized and counted in ONE job (the count sizes nlist,
-    * in lockstep with the oracle's COUNT(*) scalar subquery), so a
-    * derived training frame's lineage runs once. Then:
-    *   - at most [[Lloyd.DRIVER_COMPONENTS]] components (n·DIM): one
-    *     more job collects the training set and the rounds run on the
-    *     driver ([[Lloyd]]), returning a LocalRelation with the loop's
-    *     schema — 2 jobs in all;
-    *   - above the bound, or for a frame the driver can't reproduce
-    *     exactly (see [[Lloyd]]): the distributed loop below over the
-    *     materialized frame, checkpointed per round so downstream plans
-    *     see plain attributes, not ITER nested lineages.
-    * Both paths give bit-identical rows and the same schema (LloydSpec).
+    * cv) for the ≤ nlistFor(n) centroids that survive [[Lloyd]]'s
+    * rounds. n is counted in the job that materializes `e`, in lockstep
+    * with the oracle's COUNT(*) scalar subquery ([[sqlCodebook]]).
     */
   private[graft] def codebook(e: DataFrame): DataFrame =
-    codebook(e, Lloyd.DRIVER_COMPONENTS)
+    Lloyd.codebook(e, nlistFor, DIM, 1)
 
-  /** `driverComponents` is LloydSpec's seam for forcing either path. */
-  private[graft] def codebook(e: DataFrame,
-      driverComponents: Long): DataFrame = {
-    val (cp, n) = Lloyd.materialize(e)
-    val nlist = nlistFor(n)
-    Lloyd.collect(cp, n, DIM, driverComponents)
-      .flatMap(Lloyd.train(_, nlist, 1, ITER))
-      .map { subs =>
-        val (ids, cvs) = subs.head
-        // the loop's schema: cent_id is the kernel's output, nullable
-        // iff `v` is
-        cp.sparkSession.createDataFrame(
-          ids.indices.map(j => Row(ids(j), cvs(j).toSeq)).asJava,
-          StructType(Seq(
-            StructField("cent_id", LongType, cp.schema("v").nullable),
-            Lloyd.cvField)))
-      }
-      .getOrElse(lloyd(cp, nlist))
-  }
-
-  /** The distributed Lloyd loop of [[codebook]], checkpointed per step. */
-  private def lloyd(e: DataFrame, nlist: Int): DataFrame = {
-    val seeds = e
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        Lloyd.seedKey(col("vec_id")).as("hk"))
-      .orderBy("hk", "cent_id").limit(nlist).drop("hk")
-      .transform(graft.Checkpoint.of)
-    (1 to ITER).foldLeft(seeds) { (cents, _) =>
-      val sums = (0 until DIM).map(i =>
-        sum(Lloyd.rounded(element_at(col("v"), i + 1))).as(s"s$i"))
-      assign(e, cents).groupBy("cent_id")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("cent_id"), array((0 until DIM).map(i =>
-          col(s"s$i").cast("double") / col("n")): _*).as("cv"))
-        .transform(graft.Checkpoint.of)
-    }
-  }
-
-  /** One centroid-mean component for the DuckDB mirror (1-based dim). */
-  private lazy val sqlMeanList: String = (1 to DIM).map(i =>
-    s"CAST(SUM(CAST(round(v[$i],6) AS DECIMAL(38,6))) AS DOUBLE)/COUNT(*)")
-    .mkString("[", ",\n          ", "]")
-
-  /** One Lloyd iteration in SQL: assign to `prev`, group means.
-    * `src` = the training CTE (aliased `e` inside) — defaults to the
-    * full corpus; the incremental-graph oracle trains on a base slice.
+  /** The DuckDB mirror of [[codebook]] trained over the CTE `src`
+    * (vec_id, v), ending at [[ivfCents]].
     */
-  private[sim] def sqlLloyd(prev: String, a: String, c: String,
-      src: String = "e"): String =
-    s"""$a AS (SELECT vec_id, v, cent_id FROM (
-        SELECT e.vec_id, e.v, c.cent_id,
-          row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
-            AS rk
-        FROM $src e, $prev c) WHERE rk = 1),
-    $c AS (SELECT cent_id, $sqlMeanList AS cv FROM $a GROUP BY cent_id)"""
+  private[graft] def sqlCodebook(src: String): String =
+    Lloyd.sqlTrain(src, "v", DIM, sqlNlistLimit(src))
+
+  /** The CTE the IVF oracles read the trained (cent_id, cv) from. */
+  private[sim] def ivfCents: String = Lloyd.sqlCents()
 
   /** The full trained-IVF pipeline as a reusable CTE chain ending in
     * `ivf_hits(query_id, neighbor_id, rank, cosine)` — shared by the
@@ -425,19 +347,14 @@ object Knn {
     */
   private[sim] lazy val sqlIvfCtes = s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")},
+    ${sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, $ivfCents c) WHERE rk = 1),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NQ),
     probes AS (
       SELECT query_id, qv, cent_id FROM (
@@ -445,7 +362,7 @@ object Knn {
           row_number() OVER (PARTITION BY q.query_id
             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cent_id)
             AS rk
-        FROM q, c2 c) WHERE rk <= $NPROBE),
+        FROM q, $ivfCents c) WHERE rk <= $NPROBE),
     ivf_hits AS (
       SELECT query_id, neighbor_id, rank, cosine FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -501,9 +418,9 @@ object Knn {
     },
     Some(s"""WITH $sqlIvfCtes,
     counts AS MATERIALIZED (
-      SELECT c2.cent_id, COUNT(a.vec_id)::BIGINT AS n_vectors
-      FROM c2 LEFT JOIN assigned a ON a.cent_id = c2.cent_id
-      GROUP BY c2.cent_id)
+      SELECT $ivfCents.cent_id, COUNT(a.vec_id)::BIGINT AS n_vectors
+      FROM $ivfCents LEFT JOIN assigned a ON a.cent_id = $ivfCents.cent_id
+      GROUP BY $ivfCents.cent_id)
     SELECT cent_id, n_vectors,
       (n_vectors * 1000000
         // (SELECT SUM(n_vectors) FROM counts))::BIGINT AS share_m6
@@ -567,16 +484,16 @@ object Knn {
       FROM (
         SELECT a.cent_id,
           [a.v[i] - c.cv[i] for i in range(1, len(a.v) + 1)] AS rv
-        FROM assigned a JOIN c2 c USING (cent_id))),
+        FROM assigned a JOIN $ivfCents c USING (cent_id))),
     ag AS (
       SELECT cent_id, COUNT(*)::BIGINT AS n_vectors, SUM(r2m) AS t
       FROM resid GROUP BY cent_id)
-    SELECT c2.cent_id,
+    SELECT $ivfCents.cent_id,
       COALESCE(ag.n_vectors, 0)::BIGINT AS n_vectors,
       (CASE WHEN COALESCE(ag.n_vectors, 0) = 0 THEN NULL
         ELSE CAST(ag.t AS DOUBLE) / ag.n_vectors END) AS mean_r2_micro
-    FROM c2 LEFT JOIN ag USING (cent_id)
-    ORDER BY c2.cent_id"""))
+    FROM $ivfCents LEFT JOIN ag USING (cent_id)
+    ORDER BY $ivfCents.cent_id"""))
 
   private val ivf = Q(
     "knn_ivf",
@@ -793,10 +710,11 @@ object Knn {
     * full-table rewrite. Dynamic overwrite replaces the affected
     * partitions; a partition left EMPTY gets no rows written (dynamic
     * overwrite cannot express "now empty"), so its directory is
-    * removed explicitly. Affected-partition and leftover-dir lists are
-    * collected — bounded by the removal's cell fan-out, never corpus-
-    * sized (the Sources touched-bucket contract). `schema` is the
-    * table's written one (lists or codes).
+    * removed explicitly, and so is its `cent_id=` parent once no
+    * ingest slice is left under it. Affected-partition and leftover-dir
+    * lists are collected — bounded by the removal's cell fan-out, never
+    * corpus-sized (the Sources touched-bucket contract). `schema` is
+    * the table's written one (lists or codes).
     */
   private[sim] def deleteFromLists(s: SparkSession, listsPath: String,
       schema: StructType, ids: DataFrame): Seq[Long] = {
@@ -817,9 +735,11 @@ object Knn {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fs = new org.apache.hadoop.fs.Path(listsPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    for ((c, i) <- aff if !wrote((c, i)))
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$listsPath/cent_id=$c/ingest_id=$i"), true)
+    for ((c, i) <- aff if !wrote((c, i))) {
+      val cell = new org.apache.hadoop.fs.Path(s"$listsPath/cent_id=$c")
+      fs.delete(new org.apache.hadoop.fs.Path(cell, s"ingest_id=$i"), true)
+      if (fs.listStatus(cell).isEmpty) fs.delete(cell, true)
+    }
     aff.map(_._1).distinct.toSeq
   }
 
@@ -991,19 +911,14 @@ object Knn {
         list_transform(v, x -> CASE WHEN s = 0 THEN 0.0
           ELSE round(x / s) END) AS c, s
       FROM qz),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")},
+    ${sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, cent_id FROM (
         SELECT e.vec_id, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, $ivfCents c) WHERE rk = 1),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NQ),
     probes AS (
       SELECT query_id, cent_id FROM (
@@ -1011,7 +926,7 @@ object Knn {
           row_number() OVER (PARTITION BY q.query_id
             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cent_id)
             AS rk
-        FROM q, c2 c) WHERE rk <= $NPROBE),
+        FROM q, $ivfCents c) WHERE rk <= $NPROBE),
     topr AS (
       SELECT query_id, vec_id FROM (
         SELECT p.query_id, a.vec_id,
@@ -1110,26 +1025,21 @@ object Knn {
     (s, dir) => knnGraph(s, dir).orderBy("query_id", "rank"),
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")},
+    ${sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, $ivfCents c) WHERE rk = 1),
     probes AS (
       SELECT query_id, qv, cent_id FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk <= $NPROBE)
+        FROM e, $ivfCents c) WHERE rk <= $NPROBE)
     SELECT query_id, neighbor_id, rank, cosine FROM (
       SELECT p.query_id, a.vec_id AS neighbor_id,
         row_number() OVER (PARTITION BY p.query_id
@@ -1231,26 +1141,21 @@ object Knn {
   private def sqlKnnEdgesCte: String =
     s"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")},
+    ${sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, $ivfCents c) WHERE rk = 1),
     probes AS (
       SELECT query_id, qv, cent_id FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk <= $NPROBE),
+        FROM e, $ivfCents c) WHERE rk <= $NPROBE),
     edges AS (
       SELECT query_id AS u, neighbor_id AS v_id FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -2270,14 +2175,9 @@ object Knn {
     },
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")}
+    ${sqlCodebook("e")}
     SELECT cent_id, g.i AS dim_idx, cv[g.i] AS component
-    FROM c2, range(1, ${DIM + 1}) g(i)
+    FROM $ivfCents, range(1, ${DIM + 1}) g(i)
     ORDER BY cent_id, dim_idx"""))
 
   private val kmeansAssign = Q(
@@ -2290,18 +2190,13 @@ object Knn {
     },
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")}
+    ${sqlCodebook("e")}
     SELECT vec_id, cent_id FROM (
       SELECT e.vec_id, c.cent_id,
         row_number() OVER (PARTITION BY e.vec_id
           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
           AS rk
-      FROM e, c2 c) WHERE rk = 1 ORDER BY vec_id"""))
+      FROM e, $ivfCents c) WHERE rk = 1 ORDER BY vec_id"""))
 
   // -------------------------------------------------------------- knn_recall
   /** ANN EVALUATION as a first-class operator — recall@k of the trained
@@ -2469,7 +2364,7 @@ object Knn {
     s"WITH RECURSIVE $sqlKnnEdgesCte,${sqlComponentsTail()}"
 
   /** [[sqlKnnEdgesCte]] with the codebook trained on the 75% BASE split
-    * only (seeds + both Lloyd rounds over `eb`) and assignment/probing
+    * only (seeds and rounds over `eb`) and assignment/probing
     * over the FULL corpus — exactly [[readKnnGraphIncremental]]'s
     * frozen-codebook contract, mirrored in SQL.
     */
@@ -2478,26 +2373,21 @@ object Knn {
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
     eb AS MATERIALIZED (SELECT vec_id, v FROM e
       WHERE vec_id % $INCR_SLICE_MOD < ${INCR_SLICE_MOD - 1}),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM eb
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("eb")}),
-    ${sqlLloyd("c0", "a1", "c1", "eb")},
-    ${sqlLloyd("c1", "a2", "c2", "eb")},
+    ${sqlCodebook("eb")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, $ivfCents c) WHERE rk = 1),
     probes AS (
       SELECT query_id, qv, cent_id FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk <= $NPROBE),
+        FROM e, $ivfCents c) WHERE rk <= $NPROBE),
     edges AS (
       SELECT query_id AS u, neighbor_id AS v_id FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -2520,26 +2410,21 @@ object Knn {
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
     er AS MATERIALIZED (SELECT vec_id, v FROM e
       WHERE vec_id % $INCR_SLICE_MOD <> ${INCR_SLICE_MOD - 1}),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${sqlNlistLimit("e")}),
-    ${sqlLloyd("c0", "a1", "c1")},
-    ${sqlLloyd("c1", "a2", "c2")},
+    ${sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM er e, c2 c) WHERE rk = 1),
+        FROM er e, $ivfCents c) WHERE rk = 1),
     probes AS (
       SELECT query_id, qv, cent_id FROM (
         SELECT e.vec_id AS query_id, e.v AS qv, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM er e, c2 c) WHERE rk <= $NPROBE),
+        FROM er e, $ivfCents c) WHERE rk <= $NPROBE),
     edges AS (
       SELECT query_id AS u, neighbor_id AS v_id FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -3155,7 +3040,7 @@ object Knn {
     -- CTEs per reference, and the unrolled walk references the corpus
     -- ~10x and the trainer chain 2x more (the r13 open-files trap class)
     bse AS MATERIALIZED (SELECT vec_id, v FROM e),
-    bc2 AS MATERIALIZED (SELECT cent_id, cv FROM c2),
+    bc2 AS MATERIALIZED (SELECT cent_id, cv FROM $ivfCents),
     bsym AS MATERIALIZED (SELECT u, v_id AS v FROM edges
       UNION SELECT v_id, u FROM edges),
     bmed AS MATERIALIZED (

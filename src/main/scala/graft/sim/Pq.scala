@@ -1,8 +1,6 @@
 package graft.sim
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,8 +12,7 @@ import graft.functions.CosineSim.{cosineSim, dotProduct}
   * FAISS `IndexPQ` shape): the vector-compression twin of
   * `knn_ivf_quantized`'s full-dimension int8 scalar quantization.
   * d=64 splits into M=4 16-dim subspaces; each subspace trains its own
-  * small codebook (seeded-sample + 2 Lloyd rounds, the
-  * [[Knn.codebook]] recipe at subspace width) and every corpus vector
+  * small codebook ([[Lloyd]] at subspace width) and every corpus vector
   * compresses to M small codes — 4 bytes standing in for 512. Queries
   * score candidates by ASYMMETRIC DISTANCE COMPUTATION: one M×KSUB
   * look-up table of exact subspace dot products per query, then each
@@ -25,10 +22,7 @@ import graft.functions.CosineSim.{cosineSim, dotProduct}
   *
   * Deterministic end-to-end, so the whole train→encode→scan→re-rank
   * loop hash-gates:
-  *   - sub-codebooks: identical seed rows (md5-order), assignment via
-  *     the bit-exact [[graft.functions.NearestCentroid]] kernel, means
-  *     as exact DECIMAL(38,6) sums of round(x,6) ÷ count (the
-  *     kmeans_train parity recipe, per subspace);
+  *   - sub-codebooks: [[Lloyd]]'s deterministic trainer, per subspace;
   *   - codes are DENSE 1-based ranks of the surviving centroids
   *     (row_number over cent_id — both engines derive the same map);
   *   - each LUT entry is the sequential-fold dot product (bit-equal to
@@ -48,18 +42,15 @@ import graft.functions.CosineSim.{cosineSim, dotProduct}
   * default: the re-rank cost is a CONSTANT per query (50 float
   * vectors), not a corpus fraction.
   *
-  * Scale shape: training materializes the corpus once; up to
-  * [[Lloyd.DRIVER_COMPONENTS]] components it then trains on the driver
-  * from one collect, and above that each of the 2 Lloyd rounds is one
-  * pass over the M-exploded corpus exchanging only KSUB-row centroid
-  * tables per subspace; encoding is map-side (M kernel calls
-  * against 4 one-row broadcast codebooks, zero exchange); the ADC scan
-  * broadcasts |Q| rows of (query_id, 4 LUT arrays) against the THIN
-  * codes table — the corpus's float vectors are never read by the
-  * scan, which is the whole point: at 100 TB the scan reads the 64×
-  * smaller codes table, map-filters to per-partition top-RERANK via
-  * the partial WindowGroupLimit, and only ≤ RERANK·|Q| survivors
-  * re-join the float vectors.
+  * Scale shape: training is [[Lloyd]]'s (one materialization of the
+  * corpus, then the driver or one pass per round); encoding is map-side
+  * (M kernel calls against 4 one-row broadcast codebooks, zero
+  * exchange); the ADC scan broadcasts |Q| rows of (query_id, 4 LUT
+  * arrays) against the THIN codes table — the corpus's float vectors
+  * are never read by the scan, which is the whole point: at 100 TB the
+  * scan reads the 64× smaller codes table, map-filters to
+  * per-partition top-RERANK via the partial WindowGroupLimit, and only
+  * ≤ RERANK·|Q| survivors re-join the float vectors.
   */
 object Pq {
 
@@ -68,7 +59,6 @@ object Pq {
   private val M = 4        // subspaces
   private val SD = 16      // dims per subspace (M·SD = 64)
   private val KSUB = 16    // centroids per subspace
-  private val ITER = 2     // Lloyd rounds (kmeans_train parity recipe)
   private val RERANK = 50  // ADC survivors re-scored with exact cosine
 
   private def emb(s: SparkSession, dir: String): DataFrame =
@@ -82,77 +72,12 @@ object Pq {
 
   private def sub(m: Int, v: Column): Column = slice(v, m * SD + 1, SD)
 
-  /** Train ALL M sub-codebooks jointly; output (m, code 1..≤KSUB dense
-    * LONG, cv). The training frame is materialized and counted in ONE
-    * job; at most [[Lloyd.DRIVER_COMPONENTS]] components (n·M·SD) train
-    * on the driver ([[Lloyd]], one more job), returning a LocalRelation
-    * with the loop's schema in which `code` is the rank of the surviving
-    * cent_id within its subspace. Larger frames, and frames the driver
-    * can't reproduce exactly, take the loop below over the materialized
-    * frame; LloydSpec pins both paths to the same rows and schema.
+  /** The M sub-codebooks over `e` (`vec_id` long, `v`), trained
+    * jointly by [[Lloyd]]: (m, code, cv), code the dense 1-based rank of
+    * the surviving centroid within subspace m.
     */
   private[graft] def subCodebooks(e: DataFrame): DataFrame =
-    subCodebooks(e, Lloyd.DRIVER_COMPONENTS)
-
-  /** `driverComponents` is LloydSpec's seam for forcing either path. */
-  private[graft] def subCodebooks(e: DataFrame,
-      driverComponents: Long): DataFrame = {
-    val (cp, n) = Lloyd.materialize(e)
-    Lloyd.collect(cp, n, M * SD, driverComponents)
-      .flatMap(Lloyd.train(_, KSUB, M, ITER))
-      .map { subs =>
-        val rows = subs.zipWithIndex.flatMap { case ((ids, cvs), m) =>
-          ids.indices.map(j => Row(m, j + 1L, cvs(j).toSeq))
-        }
-        // the loop's schema: m and code are never null
-        cp.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("m", IntegerType, nullable = false),
-          StructField("code", LongType, nullable = false), Lloyd.cvField)))
-      }
-      .getOrElse(subLloyd(cp))
-  }
-
-  /** The distributed loop of [[subCodebooks]]: one Lloyd chain keyed by
-    * (m, cent_id) instead of M sequential per-subspace chains. The
-    * corpus explodes once to (vec_id, m, sv) rows and every round is
-    * ONE assignment + ONE grouped mean job covering all subspaces — M×
-    * fewer Spark jobs and checkpoint barriers for byte-identical
-    * per-subspace arithmetic (the seed set, the kernel's per-m sorted
-    * centroid array, the DECIMAL(38,6) sums per (m, cent_id), and the
-    * per-m dense-rank codes are each exactly what the sequential chain
-    * computed).
-    */
-  private def subLloyd(e: DataFrame): DataFrame = {
-    val sve = e.select(col("vec_id"), explode(array((0 until M).map(m =>
-        struct(lit(m).as("m"), sub(m, col("v")).as("sv"))): _*)).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-    // the seed ROWS are the same md5-ordered vec_ids in every subspace —
-    // one corpus sort-limit, joined back to the m-exploded slices
-    val seedIds = e
-      .select(col("vec_id"), Lloyd.seedKey(col("vec_id")).as("hk"))
-      .orderBy("hk", "vec_id").limit(KSUB).select("vec_id")
-    val seeds = sve.join(seedIds, "vec_id")
-      .select(col("m"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-      .transform(graft.Checkpoint.of)
-    val trained = (1 to ITER).foldLeft(seeds) { (cents, _) =>
-      val centArr = cents.groupBy("m").agg(
-        array_sort(collect_list(struct(col("cent_id"), col("cv")))).as("cs"))
-      val sums = (0 until SD).map(i =>
-        sum(Lloyd.rounded(element_at(col("sv"), i + 1))).as(s"s$i"))
-      sve.join(broadcast(centArr), "m")
-        .withColumn("cent_id", nc(col("sv"), col("cs")))
-        .groupBy("m", "cent_id")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("m"), col("cent_id"), array((0 until SD).map(i =>
-          col(s"s$i").cast("double") / col("n")): _*).as("cv"))
-        .transform(graft.Checkpoint.of)
-    }
-    trained
-      .withColumn("code", row_number().over(
-        Window.partitionBy("m").orderBy("cent_id")).cast("long"))
-      .select("m", "code", "cv")
-      .transform(graft.Checkpoint.of)
-  }
+    Lloyd.codebook(e, _ => KSUB, M * SD, M)
 
   /** Per-subspace one-row broadcast codebook arrays (code-ASC sorted so
     * the kernel's strict-> scan reproduces (cos DESC, code ASC)) off the
@@ -213,7 +138,7 @@ object Pq {
     },
     Some {
       val perSub = (0 until M).map(m =>
-        subSql(m, "", "e", "seeds") + s""",
+        subSql(m, "", "e") + s""",
         lut$m AS (SELECT q.query_id,
             list(list_dot_product(q.qv[${m * SD + 1}:${(m + 1) * SD}],
               cb.cv) ORDER BY cb.code) AS lut
@@ -221,10 +146,6 @@ object Pq {
       val adc = (0 until M).map(m => s"l$m.lut[c.k$m]").mkString(" + ")
       s"""WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-      seeds AS (SELECT vec_id, v FROM e
-        ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-          vec_id
-        LIMIT $KSUB),
       q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NQ),
       $perSub,
       codes AS (SELECT k0.vec_id, k0.code AS k0, k1.code AS k1,
@@ -251,39 +172,24 @@ object Pq {
       WHERE rank <= $K ORDER BY query_id, rank"""
     })
 
-  /** Per-subspace mirror chain over `base`(vec_id, v) seeded from
-    * `seeds`(vec_id, v): ${p}sv$m slices, 2 Lloyd rounds, dense-code
-    * table cb_$m (no prefix — shared name shape with the LUT/codes
-    * consumers), corpus assignment k$m. `p` keeps the two chains of a
-    * query that trains on both raw vectors and residuals disjoint.
+  /** Per-subspace mirror chain over `base`(vec_id, v): ${p}sv$m slices,
+    * the [[Lloyd.sqlTrain]] chain over them, dense-code table cb_$m (no
+    * prefix — shared name shape with the LUT/codes consumers), corpus
+    * assignment k$m. `p` keeps the two chains of a query that trains on
+    * both raw vectors and residuals disjoint.
     */
-  private def subSql(m: Int, p: String, base: String,
-      seeds: String): String = {
-    val lo = m * SD + 1; val hi = (m + 1) * SD
-    val meanList = (1 to SD).map(i =>
-      s"CAST(SUM(CAST(round(sv[$i],6) AS DECIMAL(38,6))) AS DOUBLE)/COUNT(*)")
-      .mkString("[", ",\n          ", "]")
-    def lloyd(prev: String, a: String, c: String): String =
-      s"""$a AS (SELECT vec_id, sv, cent_id FROM (
-        SELECT s.vec_id, s.sv, c.cent_id,
-          row_number() OVER (PARTITION BY s.vec_id
-            ORDER BY list_cosine_similarity(s.sv, c.cv) DESC, c.cent_id)
-            AS rk
-        FROM ${p}sv$m s, $prev c) WHERE rk = 1),
-      $c AS (SELECT cent_id, $meanList AS cv FROM $a GROUP BY cent_id)"""
-    s"""${p}sv$m AS (SELECT vec_id, v[$lo:$hi] AS sv FROM $base),
-      ${p}c0_$m AS (SELECT vec_id AS cent_id, v[$lo:$hi] AS cv FROM $seeds),
-      ${lloyd(s"${p}c0_$m", s"${p}a1_$m", s"${p}c1_$m")},
-      ${lloyd(s"${p}c1_$m", s"${p}a2_$m", s"${p}c2_$m")},
+  private def subSql(m: Int, p: String, base: String): String =
+    s"""${p}sv$m AS (SELECT vec_id, v[${m * SD + 1}:${(m + 1) * SD}] AS sv
+        FROM $base),
+      ${Lloyd.sqlTrain(s"${p}sv$m", "sv", SD, s"LIMIT $KSUB", p, s"_$m")},
       cb_$m AS (SELECT row_number() OVER (ORDER BY cent_id) AS code, cv
-        FROM ${p}c2_$m),
+        FROM ${Lloyd.sqlCents(p, s"_$m")}),
       k$m AS (SELECT vec_id, code FROM (
         SELECT s.vec_id, cb.code,
           row_number() OVER (PARTITION BY s.vec_id
             ORDER BY list_cosine_similarity(s.sv, cb.cv) DESC, cb.code)
             AS rk
         FROM ${p}sv$m s, cb_$m cb) WHERE rk = 1)"""
-  }
 
   // ---------------------------------------------------- knn_pq_distortion
   /** PQ RECONSTRUCTION-ERROR report — the compression-quality card for
@@ -350,7 +256,7 @@ object Pq {
         .orderBy("m")
     },
     Some {
-      val chains = (0 until M).map(m => subSql(m, "", "e", "seeds"))
+      val chains = (0 until M).map(m => subSql(m, "", "e"))
         .mkString(",\n      ")
       val cbcomp = (0 until M).map(m =>
         s"""SELECT $m AS m, code, u.s.p AS p0,
@@ -360,10 +266,6 @@ object Pq {
         "\n        UNION ALL\n        ")
       s"""WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-      seeds AS (SELECT vec_id, v FROM e
-        ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-          vec_id
-        LIMIT $KSUB),
       $chains,
       codes AS (SELECT k0.vec_id, k0.code AS k0, k1.code AS k1,
           k2.code AS k2, k3.code AS k3
@@ -472,7 +374,7 @@ object Pq {
     },
     Some {
       val perSub = (0 until M).map(m =>
-        subSql(m, "r", "res", "rseeds") + s""",
+        subSql(m, "r", "res") + s""",
         lut$m AS (SELECT qr.query_id, qr.cent_id,
             list(list_dot_product(qr.qv[${m * SD + 1}:${(m + 1) * SD}],
               cb.cv) ORDER BY cb.code) AS lut
@@ -486,15 +388,11 @@ object Pq {
       res AS (
         SELECT a.vec_id, a.cent_id,
           list_transform(a.v, (x, i) -> x - c.cv[i]) AS v
-        FROM assigned a JOIN c2 c USING (cent_id)),
-      rseeds AS (SELECT vec_id, v FROM res
-        ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-          vec_id
-        LIMIT $KSUB),
+        FROM assigned a JOIN ${Knn.ivfCents} c USING (cent_id)),
       qres AS (
         SELECT p.query_id, p.cent_id,
           list_transform(p.qv, (x, i) -> x - c.cv[i]) AS qv
-        FROM probes p JOIN c2 c USING (cent_id)),
+        FROM probes p JOIN ${Knn.ivfCents} c USING (cent_id)),
       $perSub,
       codes AS (SELECT r.vec_id, r.cent_id, k0.code AS k0, k1.code AS k1,
           k2.code AS k2, k3.code AS k3

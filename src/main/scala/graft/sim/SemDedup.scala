@@ -12,9 +12,8 @@ import graft.functions.CosineSim.cosineSim
   * cluster near-dups are the documented recall trade that makes the
   * pair space tractable: pairwise work is Σ |cluster|², not n².
   *
-  * Reuses the trained IVF coarse quantizer ([[Knn.codebook]]: seeded
-  * hash-order sample + decimal-exact Lloyd iterations) and the
-  * zero-shuffle broadcast-argmax assignment ([[Knn.assign]]), so the
+  * Reuses the trained IVF coarse quantizer ([[Knn.codebook]], trained
+  * by [[Lloyd]]) and the zero-shuffle broadcast-argmax assignment ([[Knn.assign]]), so the
   * whole train→assign→within-cluster-pairs pipeline is deterministic
   * and fully mirrored in the DuckDB oracle.
   *
@@ -63,19 +62,14 @@ object SemDedup {
     },
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-    c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e
-      ORDER BY ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT,
-        vec_id
-      ${Knn.sqlNlistLimit("e")}),
-    ${Knn.sqlLloyd("c0", "a1", "c1")},
-    ${Knn.sqlLloyd("c1", "a2", "c2")},
+    ${Knn.sqlCodebook("e")},
     assigned AS (
       SELECT vec_id, v, cent_id FROM (
         SELECT e.vec_id, e.v, c.cent_id,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
             AS rk
-        FROM e, c2 c) WHERE rk = 1),
+        FROM e, ${Knn.ivfCents} c) WHERE rk = 1),
     dropd AS (
       SELECT DISTINCT b.vec_id AS vec_id
       FROM assigned a JOIN assigned b

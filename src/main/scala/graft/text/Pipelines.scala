@@ -56,8 +56,9 @@ object Pipelines {
       .transform(graft.Checkpoint.of)
   }
 
-  /** Probe hook (ProbePipeline): [[stages]] without widening its
-    * visibility for production callers.
+  /** [[stages]] for perfbench's corpus_prepare workload, whose traced
+    * spans time each stage, without widening its visibility for
+    * production callers.
     */
   private[graft] def stagesForProbe(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = stages(s, dir)

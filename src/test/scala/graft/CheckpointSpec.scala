@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.SparkListenerApplicationEnd
+import org.apache.spark.scheduler.{SparkListener,
+  SparkListenerApplicationEnd, SparkListenerJobStart}
 import org.apache.spark.sql.graft.Shim
 
 /** The reliable-checkpoint switch must be a pure posture change: with
@@ -34,26 +35,46 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
-  test("ofChanged returns identical rows and flag in both modes, and " +
-      "the local fusion leaves the checkpoint fully materialized") {
+  /** `f`'s result and the number of Spark jobs it ran. */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    Shim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      Shim.waitListeners(spark)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("ofCounted counts the rows matching `where` in one job in local " +
+      "mode, fills the whole checkpoint, and agrees with reliable mode") {
     import org.apache.spark.sql.functions.col
-    val df = spark.range(1000).repartition(4)
+    // no exchange upstream: the only job is the fused count
+    val df = spark.range(0, 1000, 1, 4)
       .select(col("id"), (col("id") % 7).as("m"))
     val pred = col("m") === 3
-    val (cpL, changedL) = Checkpoint.ofChanged(df.toDF(), pred)
-    assert(changedL)
-    // the fused probe's scan must have materialized EVERY partition: a
+    val ((cpL, nL), jobsL) = withJobs(Checkpoint.ofCounted(df, pred))
+    assert(nL == 143 && jobsL == 1, s"$nL rows in $jobsL jobs")
+    // the fused count's scan must have materialized EVERY partition: a
     // second action over the checkpointed frame sees the full row set
     assert(cpL.count() == 1000)
     assert(cpL.collect().toSeq.sortBy(_.getLong(0)) ==
       df.collect().toSeq.sortBy(_.getLong(0)))
-    val (_, noneL) = Checkpoint.ofChanged(df.toDF(), col("m") === 99)
-    assert(!noneL)
+    val ((_, none), jobsNone) =
+      withJobs(Checkpoint.ofCounted(df, col("m") === 99))
+    assert(none == 0 && jobsNone == 1)
+    val ((_, all), jobsAll) = withJobs(Checkpoint.ofCounted(df))
+    assert(all == 1000 && jobsAll == 1)
     val dir = Files.createTempDirectory("graft-ckpt-fused").toFile
     try {
       spark.conf.set(Checkpoint.CONF_KEY, dir.getAbsolutePath)
-      val (cpR, changedR) = Checkpoint.ofChanged(df.toDF(), pred)
-      assert(changedR == changedL)
+      val (cpR, nR) = Checkpoint.ofCounted(df, pred)
+      assert(nR == nL)
       assert(cpR.collect().toSeq.sortBy(_.getLong(0)) ==
         cpL.collect().toSeq.sortBy(_.getLong(0)))
     } finally {
@@ -170,7 +191,7 @@ class CheckpointSpec extends SparkSpec {
         .join(l2, col("label") === col("y"))
         .select(col("id"), col("label")).distinct()
       val (next, _) =
-        Checkpoint.ofChanged(plan, col("label") < col("id"))
+        Checkpoint.ofCounted(plan, col("label") < col("id"))
       labels = next.select(col("id"), col("label"))
       val est = labels.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(est <= BigInt(Long.MaxValue),

@@ -141,11 +141,42 @@ class IndexQuerySpec extends SparkSpec {
         .filter(col("cent_id") === cell).select("vec_id")
       Knn.removeFromIvfIndex(spark, ivfPath, gone)
       Pq.removeFromIvfPqIndex(spark, pqPath, goneCodes)
-      val cellDir = new java.io.File(s"$ivfPath/lists/cent_id=$cell")
-      assert(!cellDir.exists() || Files.walk(cellDir.toPath).toArray
-        .forall(!_.toString.endsWith(".parquet")), "the cell must be empty")
+      assert(!new java.io.File(s"$ivfPath/lists/cent_id=$cell").exists(),
+        "the emptied cell's directory must go")
       bothPaths(ivf(ivfPath, q, _), "ivf emptied cell")
       bothPaths(pq(pqPath, q, _), "pq emptied cell")
+    }
+  }
+
+  test("a takedown that empties a cell removes its directory from lists " +
+      "and codes; answers equal an index that never held the cell") {
+    withDir { dir =>
+      val e = emb()
+      val (ivfPath, pqPath) = indexes(e, s"$dir/a")
+      val lists = spark.read.schema(Knn.ListsSchema)
+        .parquet(s"$ivfPath/lists")
+      val cell = lists.filter(col("vec_id") === 3L).select("cent_id")
+        .head().getLong(0)
+      val ids = lists.filter(col("cent_id") === cell).select("vec_id")
+        .collect().map(_.getLong(0)).toSeq
+      val gone = col("vec_id").isin(ids: _*)
+      Knn.removeFromIvfIndex(spark, ivfPath, e.filter(gone))
+      Pq.removeFromIvfPqIndex(spark, pqPath, e.filter(gone))
+      for (table <- Seq(s"$ivfPath/lists", s"$pqPath/codes"))
+        assert(!new java.io.File(s"$table/cent_id=$cell").exists(),
+          s"$table: the emptied cell's directory must go")
+      // the reference holds the rest under the same frozen codebooks,
+      // ingested after a full takedown: it never held the cell's vectors
+      val (refIvf, refPq) = indexes(e, s"$dir/ref")
+      Knn.removeFromIvfIndex(spark, refIvf, e)
+      Knn.appendIvfIndex(spark, refIvf, e.filter(!gone), 1L)
+      Pq.removeFromIvfPqIndex(spark, refPq, e)
+      Pq.appendIvfPqIndex(spark, refPq, e.filter(!gone), 1L)
+      val q = queries(e.filter(col("vec_id") % 50 === 3))
+      assert(bothPaths(ivf(ivfPath, q, _), "ivf") ==
+        bothPaths(ivf(refIvf, q, _), "ivf reference"))
+      assert(bothPaths(pq(pqPath, q, _), "pq") ==
+        bothPaths(pq(refPq, q, _), "pq reference"))
     }
   }
 

@@ -9,18 +9,27 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types._
 
-import graft.sim.{Knn, Pq}
+import graft.sim.{Knn, Lloyd, Pq}
 
-/** The seeded Lloyd trainers ([[Knn.codebook]], [[Pq.subCodebooks]])
-  * train bounded frames on the driver and larger ones in the distributed
-  * loop. The two paths must give the same codebook bit for bit: every
-  * IVF/PQ oracle gate, persisted index and recall card rests on it. The
-  * bound argument forces the path: Long.MaxValue admits every frame to
-  * the driver, -1 admits none.
+/** The seeded Lloyd trainer ([[Lloyd.codebook]]) trains bounded frames
+  * on the driver and larger ones in the distributed loop, for the IVF
+  * codebook ([[Knn.codebook]], one subspace) and the PQ sub-codebooks
+  * ([[Pq.subCodebooks]], four). The two paths must give the same
+  * codebook bit for bit: every IVF/PQ oracle gate, persisted index and
+  * recall card rests on it. The bound argument forces the path:
+  * Long.MaxValue admits every frame to the driver, -1 admits none.
   */
 class LloydSpec extends SparkSpec {
 
   private val dim = 64
+
+  /** The IVF and PQ trainers, as [[Knn.codebook]] and
+    * [[Pq.subCodebooks]] call them, with the bound exposed.
+    */
+  private val ivf: (DataFrame, Long) => DataFrame =
+    Lloyd.codebook(_, Knn.nlistFor, dim, 1, _)
+  private val pq: (DataFrame, Long) => DataFrame =
+    Lloyd.codebook(_, _ => 16, dim, 4, _)
 
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.logical.isInstanceOf[LocalRelation]
@@ -67,13 +76,16 @@ class LloydSpec extends SparkSpec {
   }
 
   private def both(e: DataFrame): (Seq[String], Seq[String]) =
-    (bothPaths(Knn.codebook, e), bothPaths(Pq.subCodebooks, e))
+    (bothPaths(ivf, e), bothPaths(pq, e))
 
   test("driver trainer and Spark loop: identical codebooks on the " +
       "embedding corpora and IVF residuals") {
     val e = embeddings("sf0.01")
     val (cents, subs) = both(e)
     assert(cents.size == 16 && subs.size == 4 * 16)
+    // the consumers train exactly these codebooks
+    assert(bits(Knn.codebook(e)) == cents)
+    assert(bits(Pq.subCodebooks(e)) == subs)
     // the 4,200-row synthetic corpus: the first adaptive rung, nlist 17
     val syn = spark.range(4200).toDF("vec_id")
       .withColumn("v", array((0 until dim).map(i =>
@@ -88,7 +100,7 @@ class LloydSpec extends SparkSpec {
       .select(col("vec_id"), col("cent_id"), Shim.column(
         graft.functions.VecSub(Shim.expression(col("v")),
           Shim.expression(col("cv")))).as("v"))
-    bothPaths(Pq.subCodebooks, res)
+    bothPaths(pq, res)
   }
 
   test("driver trainer and Spark loop: dead centroids, zero vectors " +
@@ -126,15 +138,42 @@ class LloydSpec extends SparkSpec {
       (i.toLong, Seq.fill(dim)(rnd.nextGaussian())))
     // a duplicate id
     val dup = vectors(rows :+ rows.head)
-    assert(!isLocal(Knn.codebook(dup, Long.MaxValue)))
+    assert(!isLocal(ivf(dup, Long.MaxValue)))
     // a null component: the loop sums it as null
     val withNull = spark.createDataFrame(
       (rows.map { case (id, v) => Row(id, v) } :+
         Row(99L, Seq.fill(dim - 1)(0.5) :+ null)).asJava,
       StructType(Seq(StructField("vec_id", LongType),
         StructField("v", ArrayType(DoubleType)))))
-    assert(!isLocal(Knn.codebook(withNull, Long.MaxValue)))
-    assert(!isLocal(Pq.subCodebooks(withNull, Long.MaxValue)))
+    assert(!isLocal(ivf(withNull, Long.MaxValue)))
+    assert(!isLocal(pq(withNull, Long.MaxValue)))
+  }
+
+  test("the loop seeds every subspace from the same first k rows: a " +
+      "null vec_id seeds PQ as it seeds IVF") {
+    // a null id orders first, so it is a seed; such a frame always takes
+    // the loop. Each PQ sub-codebook is the one-subspace trainer over its
+    // slice, codes ranking its cent_ids.
+    val rnd = new scala.util.Random(11)
+    val rows = (Row(null, Seq.fill(dim)(rnd.nextGaussian())) +:
+      (0 until 60).map(i =>
+        Row(i.toLong * 3 + 1, Seq.fill(dim)(rnd.nextGaussian())))).asJava
+    val e = spark.createDataFrame(rows, StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("v", ArrayType(DoubleType, containsNull = false),
+        nullable = false)))).repartition(3)
+    val subs = pq(e, Long.MaxValue)
+    assert(!isLocal(subs))
+    for (m <- 0 until 4) {
+      val one = Lloyd.codebook(
+        e.select(col("vec_id"), slice(col("v"), m * 16 + 1, 16).as("v")),
+        _ => 16, 16, 1, -1L)
+      val ranked = one.select(lit(m).as("m"), row_number().over(
+          org.apache.spark.sql.expressions.Window.orderBy("cent_id"))
+        .cast("long").as("code"), col("cv"))
+      assert(bits(subs.filter(col("m") === m)) == bits(ranked),
+        s"subspace $m")
+    }
   }
 
   test("bound edge: a frame at the bound trains on the driver in <= 2 " +
@@ -161,8 +200,7 @@ class LloydSpec extends SparkSpec {
         (df, jobs.get)
       } finally spark.sparkContext.removeSparkListener(listener)
     }
-    for (trainer <- Seq[(DataFrame, Long) => DataFrame](Knn.codebook,
-        Pq.subCodebooks)) {
+    for (trainer <- Seq(ivf, pq)) {
       val (onDriver, jobs) = jobsOf(trainer(atBound, bound))
       assert(isLocal(onDriver))
       assert(jobs <= 2, s"driver training ran $jobs jobs")

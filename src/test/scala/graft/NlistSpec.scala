@@ -36,6 +36,25 @@ class NlistSpec extends SparkSpec {
     assert(sql.contains("FROM e)"))
   }
 
+  test("the SQL trainer runs Lloyd.ITER rounds and ends at the CTE its " +
+      "consumers read") {
+    import graft.sim.Lloyd
+    val cte = "(\\w+) AS \\(".r
+    for ((sql, out) <- Seq(
+        Knn.sqlCodebook("e") -> Lloyd.sqlCents(),
+        Lloyd.sqlTrain("rsv2", "sv", 16, "LIMIT 16", "r", "_2") ->
+          Lloyd.sqlCents("r", "_2"))) {
+      // one argmax assignment per round
+      assert("row_number\\(\\) OVER".r.findAllIn(sql).size == Lloyd.ITER)
+      val names = cte.findAllMatchIn(sql).map(_.group(1)).toSeq
+      assert(names.size == 1 + 2 * Lloyd.ITER, names)
+      assert(names.last == out)
+    }
+    // the IVF oracles read the trained centroids by that name
+    assert(SparkEntry.oracleSql("knn_ivf")
+      .contains(s"FROM e, ${Lloyd.sqlCents()} c)"))
+  }
+
   test("codebook trains nlistFor(n) centroids across the boundary") {
     // synthetic 4200-vector corpus (first adaptive rung: nlist = 17);
     // deterministic pseudo-random unit-ish vectors, DIM=64 like the

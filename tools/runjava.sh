@@ -1,8 +1,8 @@
 #!/bin/bash
 # Run a graft main on local[*] via plain java (no sbt lock, fast startup):
 # the same JVM flags build.sbt's forked run uses (JDK17 add-opens, 8g
-# default heap, UTC). Test classes are on the classpath so probe mains
-# (Probe*, DriverSim*) launch the same way.
+# default heap, UTC). Test classes are on the classpath so test-side
+# mains (IngestDay) launch the same way.
 # Usage: tools/runjava.sh <mainClass> [args...]
 #   env: SPARK_DRIVER_MEM (default 8g), everything else passes through.
 cd /root/repo
