@@ -10,6 +10,19 @@ final case class Q(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+/** Distributed plans' answer schemas, analyzed once per input shape
+  * `key`. A driver path that answers with a local frame needs its plan's
+  * schema, and building the plan only to read it costs a call 70–140 ms
+  * of eager Dataset analysis (the shingle-pair and index-query paths).
+  */
+private[graft] object PlanSchemas {
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[Seq[Any], StructType]
+
+  def of(key: Seq[Any], analyze: => StructType): StructType =
+    schemas.getOrElseUpdate(key, analyze)
+}
+
 /** Typed loaders for the driver-generated tables (TESTDATA.md).
   *
   * All timestamp columns are parquet `isAdjustedToUTC=false`, which Spark 4
@@ -25,6 +38,11 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `embeddings` as (vec_id, v: array<double>). */
+  private[graft] def vectors(spark: SparkSession, dir: String): DataFrame =
+    apply(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** events with `ts_ms` (epoch millis, floor-truncated — same semantics as
     * DuckDB `epoch_ms(ts)`). The physical encoding of `ts` has changed under

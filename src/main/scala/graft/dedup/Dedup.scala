@@ -212,8 +212,10 @@ object Dedup {
     }
     lazy val plan = bracketedPairs(shingleTable, dfCap)
     pairsOnDriver(shingleTable, driverPostings,
-      pairSchema("jaccard", shingleTable, dfCap.isDefined,
-        answer(plan).schema))(
+      // keyed per kernel, input schema and cap shape: τ moves no type
+      // or nullability
+      graft.PlanSchemas.of(Seq("jaccard", shingleTable.schema,
+        dfCap.isDefined), answer(plan).schema))(
       ShinglePairs.jaccard(_, dfCap.getOrElse(Int.MaxValue), tau,
         answerRows(driverPostings)))
       .getOrElse(answer(
@@ -262,19 +264,6 @@ object Dedup {
     */
   private def answerRows(driverPostings: Long): Long =
     math.min(driverPostings, ShinglePairs.DRIVER_ANSWER_ROWS)
-
-  /** The distributed answer's schema per kernel, input schema and cap
-    * shape (τ moves no type or nullability). Building the plan only to
-    * read its schema costs every driver-path call 70–140 ms of eager
-    * Dataset analysis, so each shape is analyzed once per JVM.
-    */
-  private val pairSchemas = scala.collection.concurrent.TrieMap
-    .empty[(String, StructType, Boolean), StructType]
-
-  private def pairSchema(kernel: String, shingleTable: DataFrame,
-      capped: Boolean, analyze: => StructType): StructType =
-    pairSchemas.getOrElseUpdate((kernel, shingleTable.schema, capped),
-      analyze)
 
   /** A shingle-pair answer computed on the driver: the shingle table
     * collected ([[ShinglePairs.collect]], ≤ `bound` postings), `kernel`
@@ -441,8 +430,7 @@ object Dedup {
   private val lexsem = Q(
     "dedup_lexsem",
     (s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = Tables.vectors(s, dir)
       val cos = graft.functions.CosineSim.cosineSim(col("va"), col("vb"))
       minhashPairs(s, dir)
         .join(e.select(col("vec_id").as("a_id"), col("v").as("va")), "a_id")
@@ -614,9 +602,6 @@ object Dedup {
   // ------------------------------------------------------ dedup_embedding
   private val COS_TAU = 0.4  // synthetic embeddings: true near-dups ≥ ~0.4
 
-  private def embVecs(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** Exact embedding-cosine threshold self-join, blocked ("grid" /
     * 1-Bucket theta-join, Okcan & Riedewald): ids map to NBLOCKS blocks;
@@ -759,7 +744,7 @@ object Dedup {
   private val embedding = Q(
     "dedup_embedding",
     (s, dir) =>
-      capPairs(blockedCosinePairs(embVecs(s, dir), COS_TAU),
+      capPairs(blockedCosinePairs(Tables.vectors(s, dir), COS_TAU),
         "cosine", asc = false, PAIR_CAP)
         .orderBy("a_id", "b_id"),
     Some(sqlCosPairsCapped))
@@ -772,7 +757,7 @@ object Dedup {
     "dedup_embedding_budget",
     (s, dir) => {
       val p = graft.Checkpoint.of(
-        blockedCosinePairs(embVecs(s, dir), COS_TAU))
+        blockedCosinePairs(Tables.vectors(s, dir), COS_TAU))
       val kept = capPairs(p, "cosine", asc = false, PAIR_CAP)
       p.agg(count(lit(1)).cast("long").as("n_pairs"))
         .crossJoin(kept.agg(count(lit(1)).cast("long").as("n_kept")))
@@ -873,7 +858,7 @@ object Dedup {
       // bank recall miss ranked BELOW the cap at both endpoints would
       // pass this gate undetected — full recall is therefore gated
       // separately and uncapped by dedup_embedding_lsh_recall below.
-      capPairs(lshVerifiedPairs(embVecs(s, dir)),
+      capPairs(lshVerifiedPairs(Tables.vectors(s, dir)),
         "cosine", asc = false, PAIR_CAP)
         .orderBy("a_id", "b_id"),
     Some(sqlCosPairsCapped))
@@ -951,7 +936,7 @@ object Dedup {
     (s, dir) => {
       // checkpointed: consumed by the probe build, the exact side and
       // the LSH side (3 consumers of the scan lineage)
-      val e = graft.Checkpoint.of(embVecs(s, dir))
+      val e = graft.Checkpoint.of(Tables.vectors(s, dir))
       val n = e.count()
       if (n <= graft.EvalProbe.CAP) lshRecallFastPath(e, n)
       else lshRecallProbePath(e)
@@ -2017,7 +2002,7 @@ object Dedup {
     }
     lazy val plan = bracketedPairs(shingleTable, Some(dfCap))
     pairsOnDriver(shingleTable, driverPostings,
-      pairSchema("containment", shingleTable, capped = true,
+      graft.PlanSchemas.of(Seq("containment", shingleTable.schema),
         answer(plan).schema))(
       ShinglePairs.containment(_, dfCap, tauMicro,
         answerRows(driverPostings)))
@@ -2303,8 +2288,7 @@ object Dedup {
   private val lexsemPersisted = Q(
     "dedup_lexsem_persisted",
     (s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = Tables.vectors(s, dir)
       val cos = graft.functions.CosineSim.cosineSim(col("va"), col("vb"))
       DedupState.readPairs(s, dir)
         .join(e.select(col("vec_id").as("a_id"), col("v").as("va")), "a_id")

@@ -34,7 +34,8 @@ import graft.functions.{CosineSim, DotProduct, NearestCentroids, VecSub}
   *     ([[CosineSim]], [[DotProduct]], [[VecSub]], Spark's [[Round]]);
   *     ranking is Spark's order: score DESC with NaN first and −0.0 ==
   *     0.0 ([[SQLOrderingUtil.compareDoubles]]), ties by vec_id, the
-  *     query's own id excluded.
+  *     query's own id excluded — the plan's [[Ann.topK]] and
+  *     [[Ann.rerank]].
   * The answer is a LocalRelation with the distributed plan's rows, row
   * order and schema (IndexQuerySpec pins both paths by raw double bits).
   *
@@ -396,14 +397,4 @@ private[graft] object IndexQuery {
     }.toArray
     Some(answer(s, qs, top, schema))
   }
-
-  private val schemas = scala.collection.concurrent.TrieMap
-    .empty[Seq[Any], StructType]
-
-  /** The distributed plan's answer schema, analyzed once per input shape
-    * `key`: building the plan costs a driver-path call tens of ms of
-    * eager Dataset analysis.
-    */
-  private[sim] def schemaOf(key: Seq[Any], analyze: => StructType): StructType =
-    schemas.getOrElseUpdate(key, analyze)
 }

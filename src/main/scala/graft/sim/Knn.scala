@@ -20,9 +20,7 @@ object Knn {
   private val K = 5         // neighbors returned
   private[graft] val NQ = 10 // query set = vec_id < NQ
 
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+  import Ann.queries
 
   // -------------------------------------------------------- knn_bruteforce
   /** Exact top-k: broadcast the (small) query set against one pass over the
@@ -33,18 +31,9 @@ object Knn {
   private val bruteforce = Q(
     "knn_bruteforce",
     (s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      e.join(broadcast(q), col("query_id") =!= col("vec_id"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      val e = Tables.vectors(s, dir)
+      Ann.topK(e.join(broadcast(queries(e, NQ)),
+        col("query_id") =!= col("vec_id")), K)
     },
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
@@ -76,11 +65,9 @@ object Knn {
   private val radius = Q(
     "knn_radius",
     (s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val e = Tables.vectors(s, dir)
       val cos = cosineSim(col("qv"), col("v"))
-      e.join(broadcast(q), col("query_id") =!= col("vec_id"))
+      e.join(broadcast(queries(e, NQ)), col("query_id") =!= col("vec_id"))
         .filter(cos >= RAD_TAU)
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           round(cos, 6).as("cosine"))
@@ -131,34 +118,23 @@ object Knn {
   private val lsh = Q(
     "knn_lsh",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       // bucket index and candidate pairs carry bare IDs (16 B/row), not
       // the 64-double vectors — dedup hashes longs, exchanges stay thin,
       // and vectors are re-attached only to the surviving candidates
       val corpus = e.select(col("vec_id"),
           explode(lshBuckets(col("v"))).as("b"))
         .select(col("vec_id"), col("b.tbl"), col("b.bucket"))
-      val queries = e.filter(col("vec_id") < NQ)
+      val probes = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("query_id"),
           explode(lshProbeBuckets(col("v"))).as("b"))
         .select(col("query_id"), col("b.tbl"), col("b.bucket"))
-      val cand = corpus.join(broadcast(queries), Seq("tbl", "bucket"))
+      val cand = corpus.join(broadcast(probes), Seq("tbl", "bucket"))
         .filter(col("query_id") =!= col("vec_id"))
         .select("query_id", "vec_id")
         .distinct()
-      val scored = cand
-        .join(e, "vec_id")
-        .join(broadcast(e.filter(col("vec_id") < NQ)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))),
-          "query_id")
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      Ann.topK(cand.join(e, "vec_id")
+        .join(broadcast(queries(e, NQ)), "query_id"), K)
     },
     // deterministic end-to-end (seeded literal planes, id tie-breaks), so
     // the whole LSH pipeline is mirrorable: bucket = Σ 2^bit over positive
@@ -401,7 +377,7 @@ object Knn {
   private val ivfBalance = Q(
     "knn_ivf_balance",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cents = codebook(e)
       val counts = assign(e, cents).groupBy("cent_id")
         .agg(count(lit(1)).as("n_vectors"))
@@ -449,7 +425,7 @@ object Knn {
   private val ivfResiduals = Q(
     "knn_ivf_residuals",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cents = codebook(e)
       def vecSub(a: org.apache.spark.sql.Column,
           b: org.apache.spark.sql.Column) =
@@ -498,23 +474,9 @@ object Knn {
   private val ivf = Q(
     "knn_ivf",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cents = codebook(e)
-      val assigned = assign(e, cents)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val probes = probe(q, cents, NPROBE)
-        .select(col("query_id"), col("qv"), col("cent_id"))
-      val cand = assigned.join(broadcast(probes), "cent_id")
-        .filter(col("query_id") =!= col("vec_id"))
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      cand.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      ivfQueryPlan(assign(e, cents), cents, queries(e, NQ), K, NPROBE)
     },
     // fully deterministic (hash-order seeds, decimal-exact Lloyd means,
     // cosine ties broken by id), so the whole trained-IVF pipeline is
@@ -530,6 +492,13 @@ object Knn {
     StructField("cent_id", LongType), StructField("cv", ArrayType(DoubleType))))
   private[graft] val ListsSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType)),
+    StructField("cent_id", LongType), StructField("ingest_id", LongType)))
+
+  /** The kNN-graph artifact's reverse-probe table ([[probeRanked]] rows;
+    * its lists are read with [[ListsSchema]]).
+    */
+  private val ProbesSchema = StructType(Seq(
+    StructField("query_id", LongType), StructField("prank", LongType),
     StructField("cent_id", LongType), StructField("ingest_id", LongType)))
 
   /** Train an IVF index over `e` (`vec_id`, `v: array<double>`) and
@@ -656,7 +625,8 @@ object Knn {
     import org.apache.spark.sql.types.DecimalType
     require(tau > 0, s"tau must be positive, got $tau")
     val dec = DecimalType(38, 0)
-    val stored = s.read.parquet(s"$path/lists").select("vec_id", "v")
+    val stored = s.read.schema(ListsSchema).parquet(s"$path/lists")
+      .select("vec_id", "v")
     val sl = graft.Checkpoint.of(slice.select("vec_id", "v"))
     if (sl.limit(1).count() == 0) return false
     val clash = sl.select("vec_id").distinct()
@@ -793,29 +763,30 @@ object Knn {
     val cbook = s.read.schema(CentsSchema).parquet(s"$path/cents")
     lazy val plan = ivfQueryPlan(lists, cbook, q, k, nprobe)
     IndexQuery.ivf(q, cbook, lists, k, nprobe, bound,
-      IndexQuery.schemaOf(Seq("ivf", q.schema), plan.schema))
+      graft.PlanSchemas.of(Seq("ivf", q.schema), plan.schema))
       .getOrElse(plan)
   }
 
-  /** The distributed plan of [[queryIvfIndex]]. */
+  /** The distributed plan of [[queryIvfIndex]], and knn_ivf's over the
+    * lists it assigns in-query.
+    */
   private def ivfQueryPlan(lists: DataFrame, cbook: DataFrame, q: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    val probes = probe(q, cbook, nprobe)
-      .select(col("query_id"), col("qv"), col("cent_id"))
-    val cand = lists.join(broadcast(probes), "cent_id")
+      k: Int, nprobe: Int): DataFrame =
+    Ann.topK(ivfCandidates(lists, cbook, q, nprobe), k)
+
+  /** IVF candidates: each (query_id, qv) row of `q` against the members
+    * (vec_id, v, cent_id) of its `nprobe` nearest `lists` cells, itself
+    * excluded.
+    */
+  private def ivfCandidates(lists: DataFrame, cbook: DataFrame,
+      q: DataFrame, nprobe: Int): DataFrame =
+    lists.join(broadcast(probe(q, cbook, nprobe)
+        .select(col("query_id"), col("qv"), col("cent_id"))), "cent_id")
       .filter(col("query_id") =!= col("vec_id"))
-    val cos = cosineSim(col("qv"), col("v"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(cos.desc, col("vec_id"))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(cos, 6).as("cosine"))
-      .orderBy("query_id", "rank")
-  }
 
   private[graft] def cachedIndex(s: SparkSession, dir: String): String =
-    graft.Artifacts.cached("ivf", s, dir)(buildIvfIndex(emb(s, dir), _))
+    graft.Artifacts.cached("ivf", s, dir)(
+      buildIvfIndex(Tables.vectors(s, dir), _))
 
   /** IVF as a PERSISTED index — [[buildIvfIndex]] once per corpus
     * fingerprint ([[graft.Artifacts.cached]]), [[queryIvfIndex]] against
@@ -827,10 +798,7 @@ object Knn {
     "knn_ivf_persisted",
     (s, dir) => {
       val idx = cachedIndex(s, dir)
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      queryIvfIndex(s, idx, q)
+      queryIvfIndex(s, idx, queries(Tables.vectors(s, dir), NQ))
     },
     Some(sqlIvf))
 
@@ -861,7 +829,7 @@ object Knn {
   private val ivfQuantized = Q(
     "knn_ivf_quantized",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       // scale materialized before the code lambda reads it (emb_quantize
       // re-evaluation trap), then the code table materialized before the
       // joins below inline the O(d) transform into join projections
@@ -875,8 +843,7 @@ object Knn {
       // inverted lists carry (cent_id, codes, scale) — no float vectors
       val lists = assign(e, cents).select("vec_id", "cent_id")
         .join(codes, "vec_id")
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val q = queries(e, NQ)
       val probes = probe(q, cents, NPROBE)
         .select(col("query_id"), col("cent_id"))
         .join(codes.select(col("vec_id").as("query_id"),
@@ -885,23 +852,9 @@ object Knn {
       val qscore =
         (graft.functions.CosineSim.dotProduct(col("qc"), col("c")) *
           col("qs")) * col("s")
-      val wQ = Window.partitionBy(col("query_id"))
-        .orderBy(qscore.desc, col("vec_id"))
-      val topr = lists.join(broadcast(probes), "cent_id")
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("rr", row_number().over(wQ))
-        .filter(col("rr") <= RERANK)
-        .select("query_id", "vec_id")
       // float re-rank of the survivors only
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      topr.join(e, "vec_id").join(broadcast(q), "query_id")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      Ann.rerank(lists.join(broadcast(probes), "cent_id")
+        .filter(col("query_id") =!= col("vec_id")), qscore, RERANK, e, q, K)
     },
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
@@ -975,7 +928,7 @@ object Knn {
     * body, shared with graph_pagerank's edge list.
     */
   private def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
+    val e = Tables.vectors(s, dir)
     knnGraphFrom(e, codebook(e))
   }
 
@@ -1088,7 +1041,7 @@ object Knn {
       // static (u, v_id, d) — the per-round loop then needs ONE join
       // (pr on u) instead of pr⋈deg followed by ⋈edges
       val edges = e0.join(deg, "u").transform(graft.Checkpoint.of)
-      val nodes = emb(s, dir).select("vec_id")
+      val nodes = Tables.vectors(s, dir).select("vec_id")
       val last = (1 to PR_ROUNDS).foldLeft(
           nodes.withColumn("pr", lit(1000000L))) { (pr, _) =>
         val contrib = pr.join(edges, pr("vec_id") === edges("u"))
@@ -1216,7 +1169,7 @@ object Knn {
         .unionByName(tri.select(col("b").as("node")))
         .unionByName(tri.select(col("c").as("node")))
         .groupBy("node").agg(count(lit(1)).as("triangles"))
-      emb(s, dir).select(col("vec_id"))
+      Tables.vectors(s, dir).select(col("vec_id"))
         .join(deg.withColumnRenamed("node", "vec_id"), Seq("vec_id"),
           "left")
         .join(perNode.withColumnRenamed("node", "vec_id"), Seq("vec_id"),
@@ -1373,7 +1326,7 @@ object Knn {
         .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
     }
     val fin = graft.Checkpoint.of(lbl)
-    val all = emb(s, dir).select(col("vec_id"))
+    val all = Tables.vectors(s, dir).select(col("vec_id"))
       .join(fin.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("lbl"), col("vec_id")).as("community_id"))
@@ -1494,7 +1447,7 @@ object Knn {
     */
   def buildKnnGraphIndex(s: SparkSession, dir: String,
       path: String): Unit =
-    buildKnnGraphIndexFrom(emb(s, dir), path)
+    buildKnnGraphIndexFrom(Tables.vectors(s, dir), path)
 
   /** Build the persisted graph artifact at `path` from any
     * (`vec_id`, `v: array<double>`) frame, overwriting prior state.
@@ -1572,8 +1525,7 @@ object Knn {
     */
   private def writeGraphSearchLayout(s: SparkSession, path: String,
       touched: Option[Seq[Long]]): Unit = {
-    val lists = s.read.parquet(s"$path/lists")
-      .withColumn("cent_id", col("cent_id").cast("long"))
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val cells = lists.select(col("vec_id"), col("cent_id"))
     val e0 = s.read.parquet(s"$path/edges")
       .select(col("query_id").as("u"), col("neighbor_id").as("nv"))
@@ -1675,13 +1627,8 @@ object Knn {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cent_id", "ingest_id").parquet(s"$path/probes")
 
-    // partition directory names infer as int — re-cast to long
-    val lists = s.read.parquet(s"$path/lists")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-      .withColumn("ingest_id", col("ingest_id").cast("long"))
-    val probesStore = s.read.parquet(s"$path/probes")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-      .withColumn("ingest_id", col("ingest_id").cast("long"))
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
+    val probesStore = s.read.schema(ProbesSchema).parquet(s"$path/probes")
     // touched-cell id lists: bounded by NLIST (index parameter, never
     // corpus-sized) — the Sources touched-bucket collect contract
     val sliceCells = sa.select("cent_id").distinct()
@@ -1781,9 +1728,7 @@ object Knn {
 
     val removedCells = deleteFromLists(s, s"$path/lists", ListsSchema, ids)
     val probesKeep = graft.Checkpoint.of(
-      s.read.parquet(s"$path/probes")
-        .withColumn("cent_id", col("cent_id").cast("long"))
-        .withColumn("ingest_id", col("ingest_id").cast("long"))
+      s.read.schema(ProbesSchema).parquet(s"$path/probes")
         .join(qid, Seq("query_id"), "left_anti"))
     probesKeep.select("query_id", "prank", "cent_id", "ingest_id")
       .write.mode("overwrite").partitionBy("cent_id", "ingest_id")
@@ -1796,8 +1741,7 @@ object Knn {
       .collect().map(_.getLong(0)).toSeq
     val ownCells = affProbes.filter(col("prank") === 1)
       .select("cent_id").distinct().collect().map(_.getLong(0)).toSeq
-    val lists = s.read.parquet(s"$path/lists")
-      .withColumn("cent_id", col("cent_id").cast("long"))
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val qvs = lists.filter(col("cent_id").isin(ownCells: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .join(affQ, "query_id")
@@ -1849,7 +1793,7 @@ object Knn {
     */
   def readKnnGraphIncremental(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(graft.Artifacts.cached("knngraph-incr", s, dir) { path =>
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val isSlice = col("vec_id") % INCR_SLICE_MOD === INCR_SLICE_MOD - 1
       buildKnnGraphIndexFrom(e.filter(!isSlice), path)
       appendKnnGraph(s, path, e.filter(isSlice), 1L)
@@ -1877,7 +1821,7 @@ object Knn {
     */
   private def nnDescentReport(s: SparkSession, dir: String,
       rawEdges: DataFrame): DataFrame =
-    nnDescentFrom(rawEdges, emb(s, dir))
+    nnDescentFrom(rawEdges, Tables.vectors(s, dir))
 
   /** One NN-Descent round from any (query_id, neighbor_id) edge frame
     * and (vec_id, v) vector frame — the body [[nnDescentReport]] wraps
@@ -1951,7 +1895,7 @@ object Knn {
         "it would break every graph_*_persisted oracle (they re-derive " +
         "the frozen-codebook IVF edges in SQL). Refine a copy, or build " +
         "your own artifact via buildKnnGraphIndexFrom.")
-    val lists = s.read.parquet(s"$path/lists")
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val refined = graft.Checkpoint.of(nnDescentFrom(
       s.read.parquet(s"$path/edges").select("query_id", "neighbor_id"),
       lists.select("vec_id", "v")))
@@ -2036,9 +1980,8 @@ object Knn {
   private val mmrSelect = Q(
     "emb_mmr_select",
     (s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < MMR_NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val e = Tables.vectors(s, dir)
+      val q = queries(e, MMR_NQ)
       val scored = e.join(broadcast(q), col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"), col("v"),
           cosineSim(col("qv"), col("v")).as("rel"))
@@ -2166,7 +2109,7 @@ object Knn {
   private val kmeansTrain = Q(
     "kmeans_train",
     (s, dir) => {
-      val cents = codebook(emb(s, dir))
+      val cents = codebook(Tables.vectors(s, dir))
       cents.select(col("cent_id"),
           posexplode(col("cv")).as(Seq("d0", "v")))
         .select(col("cent_id"), (col("d0") + 1).cast("long").as("dim_idx"),
@@ -2183,7 +2126,7 @@ object Knn {
   private val kmeansAssign = Q(
     "kmeans_assign",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       assign(e, codebook(e))
         .select(col("vec_id"), col("cent_id"))
         .orderBy("vec_id")
@@ -2327,7 +2270,7 @@ object Knn {
       // the edge lineage (in-query: the IVF kNN-join) runs once
       val labels = graft.dedup.Dedup.connectedComponents(rawEdges
         .select(col("query_id").as("u"), col("neighbor_id").as("v")))
-      val lab = coverage.getOrElse(emb(s, dir)).select(col("vec_id"))
+      val lab = coverage.getOrElse(Tables.vectors(s, dir)).select(col("vec_id"))
         .join(labels.select(col("id").as("vec_id"), col("label")),
           Seq("vec_id"), "left")
         .select(col("vec_id"),
@@ -2475,7 +2418,7 @@ object Knn {
   def readKnnGraphTakedown(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(graft.Artifacts.cached("knngraph-takedown", s, dir) {
       path =>
-        val e = emb(s, dir)
+        val e = Tables.vectors(s, dir)
         val isSlice = col("vec_id") % INCR_SLICE_MOD === INCR_SLICE_MOD - 1
         buildKnnGraphIndexFrom(e, path)
         removeFromKnnGraph(s, path, e.filter(isSlice).select("vec_id"))
@@ -2493,7 +2436,7 @@ object Knn {
     "graph_components_takedown",
     (s, dir) => componentsReport(s, dir,
       readKnnGraphTakedown(s, dir).select("query_id", "neighbor_id"),
-      coverage = Some(emb(s, dir).filter(
+      coverage = Some(Tables.vectors(s, dir).filter(
         col("vec_id") % INCR_SLICE_MOD =!= INCR_SLICE_MOD - 1))),
     Some(sqlComponentsTakedown))
 
@@ -2527,10 +2470,8 @@ object Knn {
       val sigExpr = org.apache.spark.sql.graft.Shim.column(
         graft.functions.SignBits(
           org.apache.spark.sql.graft.Shim.expression(col("v"))))
-      val sigs = emb(s, dir).withColumn("sig", sigExpr)
-      val q = sigs.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("sig").as("qsig"))
+      val sigs = Tables.vectors(s, dir).withColumn("sig", sigExpr)
+      val q = queries(sigs, NQ, col("sig").as("qsig"))
       val ham = bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("long")
       val wh = Window.partitionBy(col("query_id"))
         .orderBy(col("hamming"), col("vec_id"))
@@ -2596,9 +2537,7 @@ object Knn {
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
           col("label"))
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("label").as("qlabel"))
+      val q = queries(e, NQ, col("label").as("qlabel"))
       val cos = cosineSim(col("qv"), col("v"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(cos.desc, col("vec_id"))
@@ -2649,9 +2588,7 @@ object Knn {
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
           col("label"))
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("label").cast("long").as("actual"))
+      val q = queries(e, NQ, col("label").cast("long").as("actual"))
       val cos = cosineSim(col("qv"), col("v"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(cos.desc, col("vec_id"))
@@ -2716,9 +2653,7 @@ object Knn {
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
           col("label"))
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("label").as("qlabel"))
+      val q = queries(e, NQ, col("label").as("qlabel"))
       val cos = cosineSim(col("qv"), col("v"))
       val w = Window.partitionBy(col("query_id"), col("is_pos"))
         .orderBy(when(col("is_pos"), col("c")).otherwise(-col("c")).asc,
@@ -2782,9 +2717,8 @@ object Knn {
     "knn_mips",
     (s, dir) => {
       import graft.functions.CosineSim.dotProduct
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val e = Tables.vectors(s, dir)
+      val q = queries(e, NQ)
       val dot = dotProduct(col("qv"), col("v"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(dot.desc, col("vec_id"))
@@ -2866,8 +2800,7 @@ object Knn {
   private[graft] def graphSearchParts(
       s: SparkSession, dir: String, nSeeds: Int = BEAM_SEEDS,
       width: Int = BEAM_W, hops: Int = BEAM_HOPS): (DataFrame, DataFrame) = {
-    val q = emb(s, dir).filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val q = queries(Tables.vectors(s, dir), NQ)
     graphSearchAt(s, cachedGraph(s, dir), q, nSeeds, width, hops)
   }
 
@@ -2879,8 +2812,7 @@ object Knn {
       q: DataFrame, nSeeds: Int, width: Int,
       hops: Int): (DataFrame, DataFrame) = {
     val cents = s.read.parquet(s"$path/cents")
-    val lists = s.read.parquet(s"$path/lists")
-      .withColumn("cent_id", col("cent_id").cast("long"))
+    val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val sym = s.read.parquet(s"$path/sym")
       .withColumn("u_cent", col("u_cent").cast("long"))
     val medoids = s.read.parquet(s"$path/medoids")
@@ -2890,8 +2822,9 @@ object Knn {
     // hold a neighbor of a member of cell c. Prunes each round's
     // vector fetch to adj(beam cells) instead of the corpus.
     // Driver-residency BOUND, fail fast (the id-width-guard precedent):
-    // nlist scales ∝ corpus via the ProbeNlist recipe, so celladj is
-    // the ONE walk structure whose driver footprint grows with data.
+    // nlist scales ∝ corpus ([[nlistFor]], commit aba6884; receipt in
+    // CHANGES.md), so celladj is the ONE walk structure whose driver
+    // footprint grows with data.
     // 2^22 rows (~64 MB boxed) admits fanout 8 × nlist 512k ≈ a
     // billion-vector corpus at 2k vectors/cell; past that the routing
     // belongs in a broadcast join, not driver state — raise loudly
@@ -2994,22 +2927,10 @@ object Knn {
     */
   private[graft] def ivfSearchAt(s: SparkSession, dir: String,
       nprobe: Int): (DataFrame, Long) = {
-    val e = emb(s, dir)
+    val e = Tables.vectors(s, dir)
     val cents = codebook(e)
-    val q = e.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val cand = assign(e, cents)
-      .join(broadcast(probe(q, cents, nprobe)
-        .select(col("query_id"), col("qv"), col("cent_id"))), "cent_id")
-      .filter(col("query_id") =!= col("vec_id"))
-    val cos = cosineSim(col("qv"), col("v"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(cos.desc, col("vec_id"))
-    val topK = cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(cos, 6).as("cosine"))
-    (topK, cand.count())
+    val cand = ivfCandidates(assign(e, cents), cents, queries(e, NQ), nprobe)
+    (Ann.topK(cand, K), cand.count())
   }
 
   /** One unrolled beam round in SQL: expand `prev` through the

@@ -1,12 +1,11 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
-import graft.functions.CosineSim.{cosineSim, dotProduct}
+import graft.functions.CosineSim.dotProduct
 
 /** PRODUCT QUANTIZATION ANN (Jégou, Douze & Schmid, TPAMI 2011 — the
   * FAISS `IndexPQ` shape): the vector-compression twin of
@@ -29,7 +28,8 @@ import graft.functions.CosineSim.{cosineSim, dotProduct}
   *     DuckDB `list_dot_product`), and the ADC score sums the M=4
   *     entries in fixed left-to-right IEEE association — identical
   *     doubles, candidate ORDER tie-broken by vec_id;
-  *   - the survivor set is re-ranked by the exact [[cosineSim]] fold.
+  *   - the survivor set is re-ranked by the exact cosine fold
+  *     ([[Ann.rerank]]).
   *
   * Recall, honestly measured (sf0.001, 10 queries, K=5): 0.42 at
   * RERANK=50 (a random 50-of-499 candidate set would score ~0.10 — the
@@ -61,9 +61,7 @@ object Pq {
   private val KSUB = 16    // centroids per subspace
   private val RERANK = 50  // ADC survivors re-scored with exact cosine
 
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+  import Ann.queries
 
   private def nc(v: Column, cs: Column): Column =
     org.apache.spark.sql.graft.Shim.column(graft.functions.NearestCentroid(
@@ -91,50 +89,48 @@ object Pq {
   private def cbArrays(e: DataFrame): Seq[DataFrame] =
     cbArraysOf(subCodebooks(e))
 
+  /** ENCODE: M map-side kernel calls, zero exchange. Every column of
+    * `df` but `v`, then its M codes k0..k(M-1) against `cbArrs`.
+    */
+  private def encode(df: DataFrame, cbArrs: Seq[DataFrame]): DataFrame =
+    cbArrs.zipWithIndex.foldLeft(df) { case (d, (cb, m)) =>
+      d.crossJoin(broadcast(cb))
+        .withColumn(s"k$m", nc(sub(m, col("v")), col(s"cs$m")))
+        .drop(s"cs$m")
+    }.drop("v")
+
+  /** The per-query ADC look-up tables: every column of `q` but `qv`,
+    * then lut0..lut(M-1), each the exact dot products of the query's
+    * subspace slice with that subspace's centroids in code-ASC order
+    * (code = array position). Interpreted HOF is fine here: |Q| rows.
+    */
+  private def luts(q: DataFrame, cbArrs: Seq[DataFrame]): DataFrame =
+    cbArrs.zipWithIndex.foldLeft(q) { case (d, (cb, m)) =>
+      d.crossJoin(broadcast(cb))
+        .withColumn(s"lut$m", transform(col(s"cs$m"),
+          c => dotProduct(sub(m, col("qv")), c.getField("cv"))))
+        .drop(s"cs$m")
+    }.drop("qv")
+
+  /** The ADC score of a codes row against a LUT row: M look-ups summed
+    * in fixed left-to-right association, as the oracles sum them.
+    */
+  private val adc: Column = (0 until M).map(m =>
+    element_at(col(s"lut$m"), col(s"k$m").cast("int"))).reduceLeft(_ + _)
+
   private val pq = Q(
     "knn_pq",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cbArrs = cbArrays(e)
-      // ENCODE: M map-side kernel calls, zero exchange — the codes table
-      // is the 4-codes-per-vector compressed corpus
-      val codes = cbArrs.zipWithIndex.foldLeft(e) { case (df, (cb, m)) =>
-        df.crossJoin(broadcast(cb))
-          .withColumn(s"k$m", nc(sub(m, col("v")), col(s"cs$m")))
-          .drop(s"cs$m")
-      }.select(col("vec_id") +: (0 until M).map(m => col(s"k$m")): _*)
-        .transform(graft.Checkpoint.of)
-      // per-query ADC look-up tables (code-ASC order = array position);
-      // interpreted HOF is fine here: NQ rows, built once, checkpointed
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val qlut = cbArrs.zipWithIndex.foldLeft(q) { case (df, (cb, m)) =>
-        df.crossJoin(broadcast(cb))
-          .withColumn(s"lut$m", transform(col(s"cs$m"),
-            c => dotProduct(sub(m, col("qv")), c.getField("cv"))))
-          .drop(s"cs$m")
-      }.drop("qv").transform(graft.Checkpoint.of)
-      // ADC SCAN over the thin codes table: 4 look-ups + 3 adds per
-      // candidate, fixed left-to-right association both engines
-      val score = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"k$m").cast("int"))).reduceLeft(_ + _)
-      val wA = Window.partitionBy(col("query_id"))
-        .orderBy(score.desc, col("vec_id"))
-      val topr = codes.join(broadcast(qlut),
-          col("query_id") =!= col("vec_id"))
-        .withColumn("rr", row_number().over(wA))
-        .filter(col("rr") <= RERANK)
-        .select("query_id", "vec_id")
-      // exact re-rank of the survivors only
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      topr.join(e, "vec_id").join(broadcast(q), "query_id")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      val codes = encode(e, cbArrs).transform(graft.Checkpoint.of)
+      val q = queries(e, NQ)
+      val qlut = luts(q, cbArrs).transform(graft.Checkpoint.of)
+      // ADC scan over the thin codes table, exact re-rank of the
+      // survivors only
+      Ann.rerank(
+        codes.join(broadcast(qlut), col("query_id") =!= col("vec_id")),
+        adc, RERANK, e, q, K)
     },
     Some {
       val perSub = (0 until M).map(m =>
@@ -217,13 +213,9 @@ object Pq {
     "knn_pq_distortion",
     (s, dir) => {
       val dec = DecimalType(38, 0)
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cbArrs = cbArrays(e)
-      val codes = cbArrs.zipWithIndex.foldLeft(e) { case (df, (cb, m)) =>
-        df.crossJoin(broadcast(cb))
-          .withColumn(s"k$m", nc(sub(m, col("v")), col(s"cs$m")))
-          .drop(s"cs$m")
-      }.select(col("vec_id") +: (0 until M).map(m => col(s"k$m")): _*)
+      val codes = encode(e, cbArrs)
       val cbcomp = cbArrs.zipWithIndex.map { case (cb, m) =>
         cb.select(explode(col(s"cs$m")).as("c"))
           .select(lit(m).as("m"), col("c.cent_id").as("code"),
@@ -299,6 +291,25 @@ object Pq {
       org.apache.spark.sql.graft.Shim.expression(a),
       org.apache.spark.sql.graft.Shim.expression(b)))
 
+  /** The corpus's IVF residuals: (vec_id, cent_id, v = x − its
+    * centroid) over [[Knn.assign]].
+    */
+  private def residuals(e: DataFrame, cents: DataFrame): DataFrame =
+    Knn.assign(e, cents)
+      .join(broadcast(cents), "cent_id")
+      .select(col("vec_id"), col("cent_id"),
+        vecSub(col("v"), col("cv")).as("v"))
+
+  /** The queries' residuals against each of their `nprobe` probed
+    * centroids: (query_id, cent_id, qv = q − centroid).
+    */
+  private def queryResiduals(q: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    Knn.probe(q, cents, nprobe)
+      .join(broadcast(cents), "cent_id")
+      .select(col("query_id"), col("cent_id"),
+        vecSub(col("qv"), col("cv")).as("qv"))
+
   /** IVF + PQ — the production FAISS `IndexIVFPQ` shape and the ANN
     * capstone: the trained IVF codebook partitions the corpus into
     * inverted lists ([[Knn.codebook]]/[[Knn.assign]], unchanged), PQ
@@ -323,54 +334,16 @@ object Pq {
   private val ivfpq = Q(
     "knn_ivfpq",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val cents = Knn.codebook(e)
-      // residual corpus: (vec_id, cent_id, v = x − centroid)
-      val res = Knn.assign(e, cents)
-        .join(broadcast(cents), "cent_id")
-        .select(col("vec_id"), col("cent_id"),
-          vecSub(col("v"), col("cv")).as("v"))
-        .transform(graft.Checkpoint.of)
+      val res = residuals(e, cents).transform(graft.Checkpoint.of)
       val cbArrs = cbArrays(res)
       // inverted lists carry (cent_id, 4 residual codes) — no floats
-      val codes = cbArrs.zipWithIndex.foldLeft(res) { case (df, (cb, m)) =>
-        df.crossJoin(broadcast(cb))
-          .withColumn(s"k$m", nc(sub(m, col("v")), col(s"cs$m")))
-          .drop(s"cs$m")
-      }.select(col("vec_id") +: col("cent_id") +:
-          (0 until M).map(m => col(s"k$m")): _*)
+      val codes = encode(res, cbArrs).transform(graft.Checkpoint.of)
+      val q = queries(e, NQ)
+      val qlut = luts(queryResiduals(q, cents, Knn.NPROBE), cbArrs)
         .transform(graft.Checkpoint.of)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      // per-(query, probed-centroid) residual LUTs
-      val qres = Knn.probe(q, cents, Knn.NPROBE)
-        .join(broadcast(cents), "cent_id")
-        .select(col("query_id"), col("cent_id"),
-          vecSub(col("qv"), col("cv")).as("qv"))
-      val qlut = cbArrs.zipWithIndex.foldLeft(qres) { case (df, (cb, m)) =>
-        df.crossJoin(broadcast(cb))
-          .withColumn(s"lut$m", transform(col(s"cs$m"),
-            c => dotProduct(sub(m, col("qv")), c.getField("cv"))))
-          .drop(s"cs$m")
-      }.drop("qv").transform(graft.Checkpoint.of)
-      val score = (0 until M).map(m =>
-        element_at(col(s"lut$m"), col(s"k$m").cast("int"))).reduceLeft(_ + _)
-      val wA = Window.partitionBy(col("query_id"))
-        .orderBy(score.desc, col("vec_id"))
-      val topr = codes.join(broadcast(qlut), "cent_id")
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("rr", row_number().over(wA))
-        .filter(col("rr") <= RERANK)
-        .select("query_id", "vec_id")
-      val cos = cosineSim(col("qv"), col("v"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(cos.desc, col("vec_id"))
-      topr.join(e, "vec_id").join(broadcast(q), "query_id")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), round(cos, 6).as("cosine"))
-        .orderBy("query_id", "rank")
+      ivfPqRank(codes, qlut, e, q, K, RERANK)
     },
     Some {
       val perSub = (0 until M).map(m =>
@@ -437,11 +410,7 @@ object Pq {
   def buildIvfPqIndex(e: DataFrame, path: String): Unit = {
     val cents = Knn.codebook(e)
     cents.write.mode("overwrite").parquet(s"$path/cents")
-    val res = Knn.assign(e, cents)
-      .join(broadcast(cents), "cent_id")
-      .select(col("vec_id"), col("cent_id"),
-        vecSub(col("v"), col("cv")).as("v"))
-      .transform(graft.Checkpoint.of)
+    val res = residuals(e, cents).transform(graft.Checkpoint.of)
     val subs = subCodebooks(res)
     subs.write.mode("overwrite").parquet(s"$path/subcents")
     encode(res, cbArraysOf(subs)).withColumn("ingest_id", lit(0L))
@@ -461,17 +430,6 @@ object Pq {
       (0 until M).map(m => StructField(s"k$m", LongType)) :+
       StructField("cent_id", LongType) :+ StructField("ingest_id", LongType))
 
-  /** Residual-encode an assigned (vec_id, cent_id, v=residual) frame
-    * against per-subspace codebook arrays → (vec_id, cent_id, k0..kM).
-    */
-  private def encode(res: DataFrame, cbArrs: Seq[DataFrame]): DataFrame =
-    cbArrs.zipWithIndex.foldLeft(res) { case (df, (cb, m)) =>
-      df.crossJoin(broadcast(cb))
-        .withColumn(s"k$m", nc(sub(m, col("v")), col(s"cs$m")))
-        .drop(s"cs$m")
-    }.select(col("vec_id") +: col("cent_id") +:
-      (0 until M).map(m => col(s"k$m")): _*)
-
   /** Incrementally ingest a vector slice: assign + residual-encode
     * against the FROZEN stored codebooks, land in the slice's own
     * (cent_id, ingest_id) partitions — replay-idempotent, associative
@@ -485,11 +443,8 @@ object Pq {
     Knn.requireFreshIds(s, s"$path/codes", e, ingestId, "appendIvfPqIndex")
     val cents = s.read.schema(Knn.CentsSchema).parquet(s"$path/cents")
     val subs = s.read.schema(SubcentsSchema).parquet(s"$path/subcents")
-    val res = Knn.assign(e, cents)
-      .join(broadcast(cents), "cent_id")
-      .select(col("vec_id"), col("cent_id"),
-        vecSub(col("v"), col("cv")).as("v"))
-    encode(res, cbArraysOf(subs)).withColumn("ingest_id", lit(ingestId))
+    encode(residuals(e, cents), cbArraysOf(subs))
+      .withColumn("ingest_id", lit(ingestId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cent_id", "ingest_id").parquet(s"$path/codes")
@@ -548,7 +503,7 @@ object Pq {
       nprobe, rerank)
     IndexQuery.ivfPq(q, cents, subs, codes, vectors, k, nprobe, rerank, M,
       SD, bound,
-      IndexQuery.schemaOf(Seq("ivfpq", q.schema, vectors.schema),
+      graft.PlanSchemas.of(Seq("ivfpq", q.schema, vectors.schema),
         plan.schema))
       .getOrElse(plan)
   }
@@ -556,50 +511,31 @@ object Pq {
   /** The distributed plan of [[queryIvfPqIndex]]. */
   private def ivfPqQueryPlan(cents: DataFrame, subs: DataFrame,
       codes: DataFrame, q: DataFrame, vectors: DataFrame, k: Int,
-      nprobe: Int, rerank: Int): DataFrame = {
-    val cbArrs = cbArraysOf(subs)
-    val qres = Knn.probe(q, cents, nprobe)
-      .join(broadcast(cents), "cent_id")
-      .select(col("query_id"), col("cent_id"),
-        vecSub(col("qv"), col("cv")).as("qv"))
-    // NOT checkpointed (unlike ivfpq's LUT over live training lineage):
-    // here the LUT derives from stored parquet + the filtered query
+      nprobe: Int, rerank: Int): DataFrame =
+    // the LUT is NOT checkpointed (unlike knn_ivfpq's over live training
+    // lineage): here it derives from stored parquet + the filtered query
     // scan, and a checkpoint would replace that file-scan lineage with
     // a LogicalRDD — erasing the selective predicate DPP needs to plan
     // the probe set as a partition filter on the codes read (the
     // literal-LocalRelation trap)
-    val qlut = cbArrs.zipWithIndex.foldLeft(qres) { case (df, (cb, m)) =>
-      df.crossJoin(broadcast(cb))
-        .withColumn(s"lut$m", transform(col(s"cs$m"),
-          c => dotProduct(sub(m, col("qv")), c.getField("cv"))))
-        .drop(s"cs$m")
-    }.drop("qv")
-    val score = (0 until M).map(m =>
-      element_at(col(s"lut$m"), col(s"k$m").cast("int"))).reduceLeft(_ + _)
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(score.desc, col("vec_id"))
-    val topr = codes.join(broadcast(qlut), "cent_id")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("rr", row_number().over(wA))
-      .filter(col("rr") <= rerank)
-      .select("query_id", "vec_id")
-    val cos = cosineSim(col("qv"), col("v"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(cos.desc, col("vec_id"))
-    topr.join(vectors, "vec_id").join(broadcast(q), "query_id")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(cos, 6).as("cosine"))
-      .orderBy("query_id", "rank")
-  }
+    ivfPqRank(codes,
+      luts(queryResiduals(q, cents, nprobe), cbArraysOf(subs)),
+      vectors, q, k, rerank)
+
+  /** IVF-PQ's ranking: ADC over the codes of each (query_id, cent_id)
+    * LUT row's cell, itself excluded, then the exact re-rank of the
+    * top-`rerank` survivors against `vectors`.
+    */
+  private def ivfPqRank(codes: DataFrame, qlut: DataFrame,
+      vectors: DataFrame, q: DataFrame, k: Int, rerank: Int): DataFrame =
+    Ann.rerank(codes.join(broadcast(qlut), "cent_id")
+      .filter(col("query_id") =!= col("vec_id")), adc, rerank, vectors, q, k)
 
   private val ivfpqPersisted = Q(
     "knn_ivfpq_persisted",
     (s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val e = Tables.vectors(s, dir)
+      val q = queries(e, NQ)
       val path = graft.Artifacts.cached("ivfpq", s, dir)(
         buildIvfPqIndex(e, _))
       queryIvfPqIndex(s, path, q, e)

@@ -20,6 +20,8 @@ import graft.{Q, Tables}
   */
 object Quantize {
 
+  import Ann.queries
+
   /** int8 codes for a vector column given its precomputed scale. The
     * scale must be a MATERIALIZED attribute, not the max-abs expression:
     * CollapseProject would inline that expression into the per-element
@@ -40,8 +42,7 @@ object Quantize {
       // lambdas (see int8Codes); the table is small and the HOFs here
       // run O(d) per element on it — this is a storage/demo op, the hot
       // kernels live in graft.functions
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = Tables.vectors(s, dir)
         .withColumn("scale_raw", int8Scale(col("v")))
         .transform(graft.Checkpoint.of)
       e.withColumn("codes", int8Codes(col("v"), col("scale_raw")))
@@ -138,14 +139,9 @@ object Quantize {
           / (CAST(COUNT(*) * COUNT(*) AS DOUBLE) * 1e12) AS variance
       FROM comp GROUP BY dim_idx)"""
 
-  private def emb(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-
   private val stats = Q(
     "emb_stats",
-    (s, dir) => statsOf(emb(s, dir)).orderBy("dim_idx"),
+    (s, dir) => statsOf(Tables.vectors(s, dir)).orderBy("dim_idx"),
     Some(s"""WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
     $statsSql
@@ -181,7 +177,7 @@ object Quantize {
     "emb_standardize",
     (s, dir) => {
       import org.apache.spark.sql.graft.Shim
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       val st = statsOf(e).agg(
         array_sort(collect_list(struct(col("dim_idx"), col("mean"),
           col("variance")))).as("ms"))
@@ -239,7 +235,7 @@ object Quantize {
     "emb_project",
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
       // one flat range, not range×range: a crossJoin of two tiny ranges
       // plans a (bounded but flagged) nested-loop join for no benefit
       val r = s.range(0, 64L * PROJ_K)
@@ -352,7 +348,7 @@ object Quantize {
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val dec = DecimalType(38, 0)
-      scatter(emb(s, dir))
+      scatter(Tables.vectors(s, dir))
         .select(col("i"), col("j"), col("n"),
           ((col("n").cast(dec) * col("sp") - col("si") * col("sj"))
             .cast("double") /
@@ -600,7 +596,7 @@ object Quantize {
       // integers the former in-plan trace/matvec/quotient computed; the
       // double casts are correctly-rounded in both forms). Removes the
       // trainer exchanges + a BNLJ scalar pair from the plan.
-      val (dims, mat) = collectScatter(scatterMirror(emb(s, dir)))
+      val (dims, mat) = collectScatter(scatterMirror(Tables.vectors(s, dir)))
       val d = dims.length
       val trace = (0 until d).map(a => mat(a)(a)).sum
       require(trace.signum != 0, "emb_spectrum: zero trace (empty corpus?)")
@@ -639,7 +635,7 @@ object Quantize {
   private val pcaPower = Q(
     "emb_pca_power",
     (s, dir) =>
-      powerIterate(emb(s, dir))
+      powerIterate(Tables.vectors(s, dir))
         .select(col("j").as("i"), col("v").cast("long").as("v_micro"))
         .orderBy("i"),
     Some(s"""$pcaCte
@@ -664,9 +660,9 @@ object Quantize {
     "emb_pca_project",
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
-      val vTop = powerIterate(emb(s, dir))
+      val vTop = powerIterate(Tables.vectors(s, dir))
         .select(col("j").as("i"), col("v").cast("long").as("vm"))
-      val comp = emb(s, dir)
+      val comp = Tables.vectors(s, dir)
         .select(col("vec_id"), posexplode(col("v")).as(Seq("d0", "x")))
         .select(col("vec_id"), (col("d0") + 1).cast("long").as("i"),
           (round(col("x"), 6).cast(DecimalType(38, 6)) * lit(1000000))
@@ -713,7 +709,7 @@ object Quantize {
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val dec = DecimalType(38, 0)
-      val comp = emb(s, dir)
+      val comp = Tables.vectors(s, dir)
         .select(col("vec_id"), posexplode(col("v")).as(Seq("d0", "x")))
         .select(col("vec_id"), (col("d0") + 1).cast("long").as("dim_idx"),
           (round(col("x"), 6).cast(DecimalType(38, 6)) * lit(1000000))
@@ -775,7 +771,7 @@ object Quantize {
       val src = Tables(s, dir, "documents")
         .select(col("doc_id").as("vec_id"),
           col("source").isin(DRIFT_NEW: _*).as("is_new"))
-      val comp = emb(s, dir).join(src, "vec_id")
+      val comp = Tables.vectors(s, dir).join(src, "vec_id")
         .select(posexplode(col("v")).as(Seq("d0", "x")), col("is_new"))
         .select((col("d0") + 1).cast("long").as("dim_idx"), col("is_new"),
           (round(col("x"), 6).cast(DecimalType(38, 6)) * lit(1000000))
@@ -854,10 +850,8 @@ object Quantize {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       import graft.functions.CosineSim.cosineSim
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = e.filter(col("vec_id") < MAT_NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val e = Tables.vectors(s, dir)
+      val q = queries(e, MAT_NQ)
       // one top-K list per budget; the rank filter is what buys
       // WindowGroupLimit (PlanSpec asserts it)
       def top(d: Int): DataFrame = {
@@ -950,7 +944,7 @@ object Quantize {
     // in-plan reference below (QuantizeTrainerSpec pins it). Removes ~14
     // exchanges and the giant-linear-plan Catalyst/Janino bill from both
     // pca2 exports.
-    val (dims, mat) = collectScatter(scatterMirror(emb(s, dir)))
+    val (dims, mat) = collectScatter(scatterMirror(Tables.vectors(s, dir)))
     val (va, vb) = pca2Vecs(dims, mat)
     trainedFrame(s, dims, Seq("va" -> va, "vb" -> vb))
   }
@@ -1101,7 +1095,7 @@ object Quantize {
       val basis = pca2Basis(s, dir)
         .select(col("j").as("i"), col("va").cast("long").as("w1"),
           col("vb").cast("long").as("w2"))
-      val comp = emb(s, dir)
+      val comp = Tables.vectors(s, dir)
         .select(col("vec_id"), posexplode(col("v")).as(Seq("d0", "x")))
         .select(col("vec_id"), (col("d0") + 1).cast("long").as("i"),
           (round(col("x"), 6).cast(DecimalType(38, 6)) * lit(1000000))
@@ -1150,7 +1144,7 @@ object Quantize {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       import graft.functions.CosineSim.cosineSim
-      val e = emb(s, dir)
+      val e = Tables.vectors(s, dir)
         .withColumn("scale_raw", int8Scale(col("v")))
         .transform(graft.Checkpoint.of) // scale as attribute (see above)
         .withColumn("codes", int8Codes(col("v"), col("scale_raw")))
@@ -1158,8 +1152,7 @@ object Quantize {
           c => c.cast("double") * col("scale_raw")))
         .select(col("vec_id"), col("v"), col("dq"))
         .transform(graft.Checkpoint.of)
-      val q = e.filter(col("vec_id") < MAT_NQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      val q = queries(e, MAT_NQ)
       def top(corpus: Column): DataFrame =
         e.join(broadcast(q), col("query_id") =!= col("vec_id"))
           .withColumn("rk", row_number()

@@ -35,8 +35,7 @@ object SemDedup {
   private val semantic = Q(
     "dedup_semantic",
     (s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = Tables.vectors(s, dir)
       val cents = Knn.codebook(e)
       // feeds both sides of the within-cluster self-join — checkpoint so
       // the broadcast-argmax kernel runs once per vector, not per side

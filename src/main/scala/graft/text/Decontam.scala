@@ -131,9 +131,7 @@ object Decontam {
   private val decontamEmb = Q(
     "decontam_embedding",
     (s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
+      val e = Tables.vectors(s, dir)
       // benchmark = the BENCH_CAP LOWEST residue-slice ids, by RANK —
       // not an id bound: an id-bound cap (`vec_id < CAP·MOD`) assumes
       // ids are dense from 0 and silently empties the benchmark on a

@@ -1406,9 +1406,7 @@ object TextOps {
         .withColumn("text_rank", row_number().over(tw).cast("long"))
         .filter(col("text_rank") <= HYBRID_LEG_K)
         .select(col("doc_id"), col("text_rank"))
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
+      val e = Tables.vectors(s, dir)
       val qv = e.filter(col("vec_id") === HYBRID_QVEC)
         .select(col("v").as("qv"))
       val cos = cosineSim(col("qv"), col("v"))

@@ -164,8 +164,12 @@ class PlanSpec extends SparkSpec {
 
   test("recall-audit rankings are partial top-K (WindowGroupLimit), " +
       "never a corpus-sized per-query sort") {
+    // the knn_* rows rank through graft.sim.Ann's shared top-k and
+    // survivor cut
     for (name <- Seq("emb_matryoshka", "emb_quantize_recall",
-        "sample_interleave", "knn_triplets", "emb_knn_classify")) {
+        "sample_interleave", "knn_triplets", "emb_knn_classify",
+        "knn_bruteforce", "knn_lsh", "knn_ivf", "knn_ivf_quantized",
+        "knn_pq", "knn_ivfpq")) {
       val d = df(name)
       d.collect() // finalize the AQE plan
       val plan = d.queryExecution.executedPlan.toString

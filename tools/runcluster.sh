@@ -6,12 +6,12 @@
 #   - app shipped as a JAR: driver -cp's the jar AND spark.jars the same
 #     file (a bare classes dir deserializes closures in a different
 #     classloader -> SerializedLambda ClassCastException)
+# The JVM itself is started by tools/runjava.sh (one flag list).
 # Usage: tools/runcluster.sh <mainClass> [args...]
 #   env: SPARK_GRAFT_MASTER (default local-cluster[2,4,4096]),
 #        SPARK_GRAFT_CHECKPOINT_DIR (default target/cluster-ckpt),
 #        everything else passes through (BENCH_ONLY, SF_DIR, ...)
-cd /root/repo
-MAIN=$1; shift
+cd "$(dirname "$0")/.."
 JAR=target/scala-2.13/aics_dask_utilsspark_2.13-0.1.0.jar
 [ -f "$JAR" ] || { echo "missing $JAR — run: sbt -batch package" >&2; exit 1; }
 export SPARK_SCALA_VERSION=2.13
@@ -19,20 +19,4 @@ export SPARK_GRAFT_MASTER="${SPARK_GRAFT_MASTER:-local-cluster[2,4,4096]}"
 export SPARK_GRAFT_APP_JAR="$(pwd)/$JAR"
 export SPARK_GRAFT_CHECKPOINT_DIR="${SPARK_GRAFT_CHECKPOINT_DIR:-$(pwd)/target/cluster-ckpt}"
 mkdir -p "$SPARK_GRAFT_CHECKPOINT_DIR"
-exec java \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "$JAR:/opt/spark/jars/*" "$MAIN" "$@"
+exec tools/runjava.sh "$@"

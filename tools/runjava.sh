@@ -1,11 +1,12 @@
 #!/bin/bash
-# Run a graft main on local[*] via plain java (no sbt lock, fast startup):
-# the same JVM flags build.sbt's forked run uses (JDK17 add-opens, 8g
-# default heap, UTC). Test classes are on the classpath so test-side
-# mains (IngestDay) launch the same way.
+# Run a graft main via plain java (no sbt lock, fast startup) with the
+# JVM flags build.sbt's forked run uses (JDK17 add-opens, 8g default
+# heap, UTC). The app JAR comes from `sbt package`; test classes are on
+# the classpath so test-side mains (IngestDay) launch the same way.
+# tools/runcluster.sh sets up a local-cluster run and execs this.
 # Usage: tools/runjava.sh <mainClass> [args...]
 #   env: SPARK_DRIVER_MEM (default 8g), everything else passes through.
-cd /root/repo
+cd "$(dirname "$0")/.."
 MAIN=$1; shift
 JAR=target/scala-2.13/aics_dask_utilsspark_2.13-0.1.0.jar
 exec java \
