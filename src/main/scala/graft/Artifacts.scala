@@ -28,7 +28,7 @@ object Artifacts {
       .filter(_.nonEmpty)
       .getOrElse(sys.props("java.io.tmpdir"))
 
-  private final case class Built(fingerprint: Seq[(String, Long, Long)],
+  private final case class Built(fingerprint: Listing.Files,
       path: String)
 
   private val built =
@@ -46,19 +46,6 @@ object Artifacts {
   private[graft] def isCached(path: String): Boolean =
     built.values.exists(_.path == path)
 
-  private def fingerprint(s: SparkSession,
-      dir: String): Seq[(String, Long, Long)] = {
-    val p = new Path(dir)
-    val it = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listFiles(p, true)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    files.result().sorted
-  }
-
   /** The path of the `kind` artifact over the corpus at `dir`, running
     * `build(path)` into an emptied path first when this JVM has no build
     * of it for the corpus's current fingerprint. A rebuild reuses the
@@ -66,7 +53,7 @@ object Artifacts {
     */
   def cached(kind: String, s: SparkSession, dir: String)(
       build: String => Unit): String = {
-    val fp = fingerprint(s, dir)
+    val fp = Listing.under(s, dir)
     def current: Option[String] = built.get((kind, dir))
       .collect { case b if b.fingerprint == fp => b.path }
     current.getOrElse(synchronized {

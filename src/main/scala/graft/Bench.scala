@@ -106,7 +106,7 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     Tables.all.foreach { t =>
       if (new java.io.File(s"$sfDir/$t.parquet").exists())
-        spark.read.parquet(s"$sfDir/$t.parquet")
+        Tables(spark, sfDir, t)
           .write.format("noop").mode("overwrite").save()
     }
   }

@@ -4,8 +4,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.Shim
 
 /** The materialization barrier every iterative / self-joining stage uses
   * (shingle tables, LSH signatures, Lloyd codebooks, connected-component
@@ -27,6 +31,16 @@ import org.apache.spark.sql.functions.lit
   * calls of the streaming sinks (`Streaming.scala`, `BatchState.scala`)
   * and the merge of `Sources.upsertParquet`; they stay in executor
   * memory whatever the setting.
+  *
+  * A frame whose rows are already on the driver stays there: when its
+  * optimized plan is a non-streaming `LocalRelation` (a driver path's
+  * answer, a `Seq(...).toDF`, projections and filters of either) of at
+  * most `spark.sql.autoBroadcastJoinThreshold` bytes as UnsafeRows, [[of]]
+  * and [[ofCounted]] return it over that relation and run no job —
+  * checkpointing it would only ship the rows out to executors to cache
+  * them. The guard keeps the rule to rows the planner would broadcast
+  * anyway: a larger local frame is checkpointed as before, so an
+  * iterative loop never re-ships a big driver-held relation every round.
   *
   * Reliable checkpoints are never read by a later application, so none
   * outlives its own: each `rdd-*` dir lives in a per-application UUID
@@ -92,10 +106,12 @@ object Checkpoint {
     * join-product estimate otherwise compounds DOUBLE-exponentially —
     * the r16 phash-CC probe spent 367 of 432 s multiplying a
     * ~5¹³-digit BigInt inside driver-side stats estimation. Capping
-    * changes no planning decision (all thresholds are longs).
+    * changes no planning decision (all thresholds are longs). A small
+    * local frame is returned over its own relation instead (see the
+    * object doc).
     */
   def of(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Shim.capStats(reliableDir(df) match {
+    keptLocal(df).getOrElse(Shim.capStats(reliableDir(df) match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty ||
@@ -106,7 +122,45 @@ object Checkpoint {
         }
         df.checkpoint()
       case None => df.localCheckpoint()
+    }))
+
+  /** `df`'s optimized plan when it is a non-streaming LocalRelation: its
+    * rows are on the driver, and reading them runs no job.
+    */
+  private[graft] def local(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming => Some(l)
+      case _ => None
+    }
+
+  /** `df` over its own LocalRelation, keeping `df`'s attributes as a
+    * checkpoint does, when that relation holds at most the broadcast
+    * threshold of UnsafeRow bytes.
+    */
+  private def keptLocal(df: DataFrame): Option[DataFrame] = {
+    val out = df.queryExecution.analyzed.output
+    // a negative threshold (-1: broadcasts off) keeps no frame local
+    val limit =
+      df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+        match {
+          case v if v.startsWith("-") => -1L
+          case v => JavaUtils.byteStringAsBytes(v)
+        }
+    local(df).filter(l => l.output.map(_.dataType) == out.map(_.dataType) &&
+        bytesAtMost(l, limit))
+      .map(l => Shim.ofRows(df.sparkSession, LocalRelation(out, l.data)))
+  }
+
+  private def bytesAtMost(l: LocalRelation, limit: Long): Boolean = {
+    lazy val unsafe = UnsafeProjection.create(l.schema)
+    var total = 0L
+    val rows = l.data.iterator
+    while (total <= limit && rows.hasNext) total += (rows.next() match {
+      case u: UnsafeRow => u.getSizeInBytes
+      case r => unsafe(r).getSizeInBytes
     })
+    total <= limit
+  }
 
   /** [[of]] fused with a row count: materialize `df` and return how many
     * of its rows match `where` (all of them by default). An iterative
@@ -127,16 +181,20 @@ object Checkpoint {
     *     convergence probe here once read only `limit(1)` of them).
     *
     * The count runs on the RDD: `Dataset.count` plans an aggregate whose
-    * exchange is a second job under AQE. CheckpointSpec pins both modes
-    * to identical rows and count, and the local mode to one job.
+    * exchange is a second job under AQE. A frame kept local (see the
+    * object doc) runs no job at all: the optimizer folds `where` into
+    * its LocalRelation, and the count is that relation's length.
+    * CheckpointSpec pins both modes to identical rows and count, the
+    * local mode to one job and a local frame to none.
     */
   def ofCounted(df: DataFrame,
       where: Column = lit(true)): (DataFrame, Long) = {
-    val cp = reliableDir(df) match {
+    val cp = keptLocal(df).getOrElse(reliableDir(df) match {
       case Some(_) => of(df)
-      case None =>
-        org.apache.spark.sql.graft.Shim.capStats(df.localCheckpoint(false))
-    }
-    (cp, cp.filter(where).queryExecution.toRdd.count())
+      case None => Shim.capStats(df.localCheckpoint(false))
+    })
+    val matching = cp.filter(where)
+    (cp, local(matching).fold(matching.queryExecution.toRdd.count())(
+      _.data.length.toLong))
   }
 }

@@ -82,7 +82,7 @@ object GenData {
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = Sessions.fromEnv()
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables(spark, src, t)
     def write(df: DataFrame, t: String, files: Int): Unit = {
       df.coalesce(files).write.mode("overwrite")
         .parquet(s"$out/$t.parquet")

@@ -37,7 +37,48 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  // (path, the session's parquet and partition-inference settings) →
+  // the listing a schema was inferred from, and that schema
+  private val inferred = scala.collection.concurrent.TrieMap
+    .empty[(String, Map[String, String]), (Listing.Files, StructType)]
+
+  // settings that can change what schema inference returns
+  private def inferenceConf(s: SparkSession): Map[String, String] =
+    s.conf.getAll.filter { case (k, _) =>
+      k.contains("parquet") || k.contains("partitionColumnTypeInference") ||
+      k == "spark.sql.caseSensitive" || k == "spark.sql.timestampType" ||
+      k == "spark.sql.session.timeZone"
+    }
+
+  /** `s.read.parquet(path)` without its schema-inference job while the
+    * table is unchanged. Inference reads parquet footers in a Spark job
+    * (~50 ms on the generated tables); this reader keeps the schema
+    * Spark inferred for `path` together with the table's file listing
+    * ([[Listing]]: path, size and mtime of each file) and, while the
+    * listing read through the new relation's own file index is the
+    * same, reads with `s.read.schema(inferred)`, which yields the same
+    * schema, rows and partition-pruned plan and runs no job. A changed,
+    * emptied or missing table, or changed inference settings, fall
+    * through to the plain inferring read, errors (UNABLE_TO_INFER_SCHEMA,
+    * PATH_NOT_FOUND) included. Reads that know their written schema
+    * pass it themselves.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val key = (path, inferenceConf(s))
+    inferred.get(key).flatMap { case (files, schema) =>
+      val known =
+        try Some(s.read.schema(schema).parquet(path))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      known.filter(df => Listing.relation(df).exists(_._2 == files))
+    }.getOrElse {
+      val df = s.read.parquet(path)
+      Listing.relation(df).filter(_._2.nonEmpty)
+        .foreach { case (_, files) => inferred(key) = (files, df.schema) }
+      df
+    }
+  }
 
   /** `embeddings` as (vec_id, v: array<double>). */
   private[graft] def vectors(spark: SparkSession, dir: String): DataFrame =

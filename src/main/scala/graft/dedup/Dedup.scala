@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -975,10 +976,12 @@ object Dedup {
     * row. `maxIter` caps only the distributed loop's rounds.
     *
     * The edges are materialized ONCE, and counted in the same job
-    * ([[graft.Checkpoint.ofCounted]]). Then:
+    * ([[graft.Checkpoint.ofCounted]]); edges that are already a small
+    * local frame (a driver path's pair answer) run neither job. Then:
     *
     *   - at most [[DRIVER_CC_ROWS]] rows of LongType ids: ONE more job
-    *     collects them packed as longs, and an exact union-find runs on
+    *     collects them packed as longs (none for a local frame, whose
+    *     rows are read where they are), and an exact union-find runs on
     *     the driver. It always unions into the smaller root, so every
     *     root is its component's min id. The answer is a local frame
     *     (LocalRelation). Driver-resident state is legal only when it is
@@ -1025,23 +1028,12 @@ object Dedup {
     * driver; see [[connectedComponents]].
     */
   private def componentsOnDriver(cp: DataFrame): DataFrame = {
-    // one job: each partition ships its edges as flat (u, v) longs; a
-    // null endpoint turns the edge into its partner's self-loop, and a
-    // flag asks for the loop's one (null, null) row
-    val parts = cp.queryExecution.toRdd.mapPartitions { rows =>
-      val uv = Array.newBuilder[Long]
-      var sawNull = false
-      rows.foreach { r =>
-        val (nu, nv) = (r.isNullAt(0), r.isNullAt(1))
-        sawNull ||= nu || nv
-        if (!nu || !nv) {
-          val u = if (nu) r.getLong(1) else r.getLong(0)
-          uv += u
-          uv += (if (nv) u else r.getLong(1))
-        }
-      }
-      Iterator.single((uv.result(), sawNull))
-    }.collect()
+    // a local frame's rows are read where they are; otherwise one job
+    // packs each partition
+    val parts = graft.Checkpoint.local(cp).fold(
+      cp.queryExecution.toRdd.mapPartitions(rows =>
+        Iterator.single(packEdges(rows))).collect())(
+      l => Array(packEdges(l.data.iterator)))
     val uv = parts.flatMap(_._1)
     // node ids sorted and unique: a smaller index IS a smaller id
     val ids = uv.clone()
@@ -1068,6 +1060,25 @@ object Dedup {
     val nullable = cp.schema.exists(_.nullable)
     cp.sparkSession.createDataFrame(out, StructType(Seq("id", "label")
       .map(StructField(_, LongType, nullable))))
+  }
+
+  /** Edge rows as flat (u, v) longs: a null endpoint turns the edge into
+    * its partner's self-loop, and the flag asks for the loop's one (null,
+    * null) row.
+    */
+  private def packEdges(rows: Iterator[InternalRow]): (Array[Long], Boolean) = {
+    val uv = Array.newBuilder[Long]
+    var sawNull = false
+    rows.foreach { r =>
+      val (nu, nv) = (r.isNullAt(0), r.isNullAt(1))
+      sawNull ||= nu || nv
+      if (!nu || !nv) {
+        val u = if (nu) r.getLong(1) else r.getLong(0)
+        uv += u
+        uv += (if (nv) u else r.getLong(1))
+      }
+    }
+    (uv.result(), sawNull)
   }
 
   /** The distributed loop of [[connectedComponents]], over a

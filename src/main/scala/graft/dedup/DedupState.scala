@@ -62,7 +62,7 @@ object DedupState {
     */
   private def writeLabels(s: SparkSession, docIds: DataFrame,
       path: String): Unit = {
-    val pairs = s.read.parquet(s"$path/pairs")
+    val pairs = Tables.parquet(s, s"$path/pairs")
     val labels = Dedup.connectedComponents(
       pairs.select(col("a_id").as("u"), col("b_id").as("v")))
     val assigned = docIds.select(col("doc_id"))
@@ -133,7 +133,7 @@ object DedupState {
     */
   private def relabelAffected(s: SparkSession, path: String,
       newDocIds: DataFrame, newPairs: DataFrame): Unit = {
-    val old = graft.Checkpoint.of(s.read.parquet(s"$path/labels")
+    val old = graft.Checkpoint.of(Tables.parquet(s, s"$path/labels")
       .select("doc_id", "cluster_id", "cluster_size"))
     val endIds = newPairs.select(col("a_id").as("doc_id"))
       .unionByName(newPairs.select(col("b_id").as("doc_id"))).distinct()
@@ -143,7 +143,7 @@ object DedupState {
       old.join(affClusters, "cluster_id").select("doc_id")
         .unionByName(newDocIds.select("doc_id")).distinct())
     lastRelabelDocs = affDocs.count()
-    val sub = s.read.parquet(s"$path/pairs")
+    val sub = Tables.parquet(s, s"$path/pairs")
       .select(col("a_id").as("u"), col("b_id").as("v"))
       .join(affDocs.withColumnRenamed("doc_id", "u"), Seq("u"),
         "left_semi")
@@ -196,7 +196,7 @@ object DedupState {
       newDocs: DataFrame, ingestId: Long = 1L): Unit = {
     require(ingestId > 0,
       s"ingestId must be > 0 (0 = base build), got $ingestId")
-    val priorIds = s.read.parquet(s"$path/buckets")
+    val priorIds = Tables.parquet(s, s"$path/buckets")
       .filter(col("ingest_id") =!= ingestId)
       .select("doc_id")
     val clash = newDocs.select("doc_id").distinct()
@@ -207,7 +207,7 @@ object DedupState {
         "globally unique (replay the SAME ingestId to retry a slice)")
     val dsNew = Dedup.shingleTable(newDocs)
     val bNew = graft.Checkpoint.of(Dedup.bandBucketsFromShingles(dsNew))
-    val bBase = s.read.parquet(s"$path/buckets")
+    val bBase = Tables.parquet(s, s"$path/buckets")
       .filter(col("ingest_id") =!= ingestId)
     val cross = bNew.as("x").join(bBase.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
@@ -263,19 +263,19 @@ object DedupState {
     */
   def removeDocs(s: SparkSession, path: String, docIds: DataFrame): Unit = {
     val ids = graft.Checkpoint.of(docIds.select("doc_id").distinct())
-    val bKeep = graft.Checkpoint.of(s.read.parquet(s"$path/buckets")
+    val bKeep = graft.Checkpoint.of(Tables.parquet(s, s"$path/buckets")
       .join(ids, Seq("doc_id"), "left_anti"))
     bKeep.select("doc_id", "band", "bh", "ingest_id")
       .write.mode("overwrite").partitionBy("ingest_id")
       .parquet(s"$path/buckets")
-    val pKeep = graft.Checkpoint.of(s.read.parquet(s"$path/pairs")
+    val pKeep = graft.Checkpoint.of(Tables.parquet(s, s"$path/pairs")
       .join(ids.select(col("doc_id").as("a_id")), Seq("a_id"), "left_anti")
       .join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_anti"))
     pKeep.select("a_id", "b_id", "jaccard", "ingest_id")
       .write.mode("overwrite").partitionBy("ingest_id")
       .parquet(s"$path/pairs")
 
-    val old = graft.Checkpoint.of(s.read.parquet(s"$path/labels")
+    val old = graft.Checkpoint.of(Tables.parquet(s, s"$path/labels")
       .select("doc_id", "cluster_id", "cluster_size"))
     val affClusters = old.join(ids, "doc_id")
       .select("cluster_id").distinct()
@@ -315,7 +315,7 @@ object DedupState {
     * Built once per corpus fingerprint ([[graft.Artifacts.cached]]).
     */
   def readLabelsIncremental(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("dedupstate-incr", s, dir) {
+    Tables.parquet(s, graft.Artifacts.cached("dedupstate-incr", s, dir) {
       path =>
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("source"))
@@ -339,7 +339,7 @@ object DedupState {
     * end-to-end. Built once per corpus fingerprint.
     */
   def readLabelsCompacted(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("dedupstate-compact", s, dir) {
+    Tables.parquet(s, graft.Artifacts.cached("dedupstate-compact", s, dir) {
       path =>
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("source"))
@@ -366,7 +366,7 @@ object DedupState {
     * once per corpus fingerprint.
     */
   def readLabelsTakedown(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("dedupstate-takedown", s, dir) {
+    Tables.parquet(s, graft.Artifacts.cached("dedupstate-takedown", s, dir) {
       path =>
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("source"))
@@ -383,14 +383,14 @@ object DedupState {
     * ingest_id bookkeeping partition column stays internal.
     */
   def readPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(cached(s, dir) + "/pairs")
+    Tables.parquet(s, cached(s, dir) + "/pairs")
       .select("a_id", "b_id", "jaccard")
 
   /** The stored full-coverage label table
     * (doc_id, cluster_id, cluster_size).
     */
   def readLabels(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(cached(s, dir) + "/labels")
+    Tables.parquet(s, cached(s, dir) + "/labels")
 
   /** Maintenance: fold appended ingest slices into the base partitions
     * of both ingest-partitioned tables (buckets, pairs) —

@@ -54,7 +54,7 @@ object MinhashIndex {
     * is a no-op; a removed id may be re-appended later.
     */
   def remove(s: SparkSession, path: String, docIds: DataFrame): Unit = {
-    val keep = graft.Checkpoint.of(s.read.parquet(s"$path/buckets")
+    val keep = graft.Checkpoint.of(graft.Tables.parquet(s, s"$path/buckets")
       .join(docIds.select("doc_id").distinct(), Seq("doc_id"),
         "left_anti"))
     keep.write.mode("overwrite").parquet(s"$path/buckets")
@@ -68,7 +68,7 @@ object MinhashIndex {
     */
   def check(s: SparkSession, path: String, newDocs: DataFrame,
       perms: Int = Dedup.PERMS, bands: Int = Dedup.BANDS): DataFrame = {
-    val state = s.read.parquet(s"$path/buckets")
+    val state = graft.Tables.parquet(s, s"$path/buckets")
       .select(col("band"), col("bh"), col("doc_id").as("base_id"))
     val probe = Dedup.bandBuckets(newDocs, perms, bands)
     val matched = probe.join(state, Seq("band", "bh"))

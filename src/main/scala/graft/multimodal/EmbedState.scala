@@ -108,7 +108,7 @@ object EmbedState {
     require(ingestId > 0,
       s"ingestId must be > 0 (0 = base build), got $ingestId")
     val bNew = graft.Checkpoint.of(bucketsOf(media))
-    val priorIds = s.read.parquet(s"$path/buckets")
+    val priorIds = graft.Tables.parquet(s, s"$path/buckets")
       .filter(col("ingest_id") =!= ingestId)
       .select("doc_id")
     val clash = bNew.select("doc_id").distinct()
@@ -118,7 +118,7 @@ object EmbedState {
         "slice under a different ingestId — identities must be " +
         "globally unique (replay the SAME ingestId to retry a slice)")
     val vNew = graft.Checkpoint.of(vecsOf(media, enc))
-    val bBase = s.read.parquet(s"$path/buckets")
+    val bBase = graft.Tables.parquet(s, s"$path/buckets")
       .filter(col("ingest_id") =!= ingestId)
     val cross = bNew.as("x").join(bBase.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
@@ -129,7 +129,7 @@ object EmbedState {
     val cand = graft.Checkpoint.of(
       cross.unionByName(selfCandidates(bNew)).distinct())
     val vAll = vNew.unionByName(
-      s.read.parquet(s"$path/vecs")
+      graft.Tables.parquet(s, s"$path/vecs")
         .filter(col("ingest_id") =!= ingestId)
         .select("doc_id", "v"))
     verify(cand, vAll).withColumn("ingest_id", lit(ingestId))
@@ -162,17 +162,17 @@ object EmbedState {
           s"got [${mediaIds.columns.mkString(", ")}]"))
     val ids = graft.Checkpoint.of(
       mediaIds.select(col(idCol).as("doc_id")).distinct())
-    val bKeep = graft.Checkpoint.of(s.read.parquet(s"$path/buckets")
+    val bKeep = graft.Checkpoint.of(graft.Tables.parquet(s, s"$path/buckets")
       .join(ids, Seq("doc_id"), "left_anti"))
     bKeep.select("doc_id", "band", "bh", "ingest_id")
       .write.mode("overwrite").partitionBy("ingest_id")
       .parquet(s"$path/buckets")
-    val vKeep = graft.Checkpoint.of(s.read.parquet(s"$path/vecs")
+    val vKeep = graft.Checkpoint.of(graft.Tables.parquet(s, s"$path/vecs")
       .join(ids, Seq("doc_id"), "left_anti"))
     vKeep.select("doc_id", "v", "ingest_id")
       .write.mode("overwrite").partitionBy("ingest_id")
       .parquet(s"$path/vecs")
-    val pKeep = graft.Checkpoint.of(s.read.parquet(s"$path/pairs")
+    val pKeep = graft.Checkpoint.of(graft.Tables.parquet(s, s"$path/pairs")
       .join(ids.select(col("doc_id").as("a_id")), Seq("a_id"), "left_anti")
       .join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_anti"))
     pKeep.select("a_id", "b_id", "cosine", "ingest_id")
@@ -184,7 +184,7 @@ object EmbedState {
     * corpus fingerprint ([[graft.Artifacts.cached]]).
     */
   def readPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("embedstate", s, dir)(
+    graft.Tables.parquet(s, graft.Artifacts.cached("embedstate", s, dir)(
       buildEmbedStateFrom(Multimodal.mediaFromDocuments(s, dir), _)) +
       "/pairs")
       .select("a_id", "b_id", "cosine")

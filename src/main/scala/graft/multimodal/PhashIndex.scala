@@ -60,7 +60,7 @@ object PhashIndex {
     * unknown id is a no-op; a removed id may be re-appended later.
     */
   def remove(s: SparkSession, path: String, mediaIds: DataFrame): Unit = {
-    val keep = graft.Checkpoint.of(s.read.parquet(s"$path/bands")
+    val keep = graft.Checkpoint.of(graft.Tables.parquet(s, s"$path/bands")
       .join(mediaIds.select("media_id").distinct(), Seq("media_id"),
         "left_anti"))
     keep.write.mode("overwrite").parquet(s"$path/bands")
@@ -76,7 +76,7 @@ object PhashIndex {
       bands: Int = BANDS, hamMax: Int = HAM_MAX): DataFrame = {
     require(hamMax < bands,
       s"pigeonhole needs hamMax < bands, got $hamMax vs $bands")
-    val state = s.read.parquet(s"$path/bands")
+    val state = graft.Tables.parquet(s, s"$path/bands")
       .select(col("band"), col("bv"),
         col("media_id").as("base_id"), col("phash").as("base_phash"))
     val matched = bandRows(hashes, bands)

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, GenericInternalRow, In, Literal, Round, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -150,33 +149,19 @@ private[graft] object IndexQuery {
       else Some((ids, sorted.map(_.getArray(v).toDoubleArray())))
     }
 
-  /** A plain file-source table's root path and the (path, size, mtime)
-    * of every file it reads under `partitionFilters`, from its relation's
-    * own listing: no Spark job. None for any other frame.
-    */
-  private def listing(table: DataFrame, partitionFilters: Seq[Expression])
-      : Option[(String, Seq[(String, Long, Long)])] =
-    table.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation =>
-      (r.location.rootPaths.mkString(","),
-        r.location.listFiles(partitionFilters, Nil).flatMap(_.files)
-          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-          .sorted)
-    }
-
   /** Parquet bytes under the given `cent_id` cells of a file-source
     * table, from the pruned file listing; unbounded for any other frame.
     */
   private[sim] def probedBytes(table: DataFrame, cells: Seq[Long]): Long =
-    listing(table, Seq(In(AttributeReference("cent_id", LongType)(),
-      cells.map(Literal(_))))).fold(Long.MaxValue)(_._2.map(_._2).sum)
+    graft.Listing.relation(table, Seq(In(AttributeReference("cent_id",
+      LongType)(), cells.map(Literal(_)))))
+      .fold(Long.MaxValue)(_._2.map(_._2).sum)
 
   /** The largest codebook table kept on the driver between calls. */
   private val FROZEN_BYTES = 4L << 20
 
   private val frozen = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, Long)], Array[InternalRow])]
+    .empty[String, (graft.Listing.Files, Array[InternalRow])]
 
   /** A codebook table's rows, collected once per set of files. Codebooks
     * are frozen across appends and a rebuild writes new files, so the
@@ -185,7 +170,7 @@ private[graft] object IndexQuery {
     * directory, and none for tables over [[FROZEN_BYTES]].
     */
   private[sim] def frozenRows(table: DataFrame): Array[InternalRow] =
-    listing(table, Nil) match {
+    graft.Listing.relation(table) match {
       case Some((dir, files)) if files.map(_._2).sum <= FROZEN_BYTES =>
         frozen.get(dir).collect { case (`files`, rs) => rs }.getOrElse {
           val rs = rows(table)

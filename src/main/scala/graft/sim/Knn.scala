@@ -1527,7 +1527,7 @@ object Knn {
       touched: Option[Seq[Long]]): Unit = {
     val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val cells = lists.select(col("vec_id"), col("cent_id"))
-    val e0 = s.read.parquet(s"$path/edges")
+    val e0 = Tables.parquet(s, s"$path/edges")
       .select(col("query_id").as("u"), col("neighbor_id").as("nv"))
     e0.unionByName(e0.select(col("nv").as("u"), col("u").as("nv")))
       .distinct()
@@ -1538,7 +1538,7 @@ object Knn {
       .select(col("u"), col("nv"), col("nv_cent"), col("u_cent"))
       .write.mode("overwrite").partitionBy("u_cent")
       .parquet(s"$path/sym")
-    s.read.parquet(s"$path/sym")
+    Tables.parquet(s, s"$path/sym")
       .select(col("u_cent").cast("long").as("cent_id"),
         col("nv_cent").as("adj_cent"))
       .distinct()
@@ -1548,7 +1548,7 @@ object Knn {
       case Some(cs) => lists.filter(col("cent_id").isin(cs: _*))
       case None => lists
     }
-    val cents = s.read.parquet(s"$path/cents")
+    val cents = Tables.parquet(s, s"$path/cents")
     val mcos = cosineSim(col("v"), col("cv"))
     val medoids = mcells.join(broadcast(cents), "cent_id")
       .groupBy("cent_id")
@@ -1612,7 +1612,7 @@ object Knn {
       s"ingestId must be > 0 (0 = base build), got $ingestId")
     requireUnrefined(s, path, "appendKnnGraph")
     requireFreshIds(s, s"$path/lists", e, ingestId, "appendKnnGraph")
-    val cents = s.read.parquet(s"$path/cents")
+    val cents = Tables.parquet(s, s"$path/cents")
     val sa = graft.Checkpoint.of(assign(e, cents))
     sa.withColumn("ingest_id", lit(ingestId))
       .write.mode("overwrite")
@@ -1680,7 +1680,7 @@ object Knn {
 
     // merge stored top-k with the new candidates and re-rank; distinct
     // absorbs a replay (recomputed candidates == stored rows)
-    val edgesCur = graft.Checkpoint.of(s.read.parquet(s"$path/edges"))
+    val edgesCur = graft.Checkpoint.of(Tables.parquet(s, s"$path/edges"))
     val refreshed = topKEdgesOf(edgesCur.join(affIds, "query_id")
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .unionByName(oldCand).distinct()
@@ -1719,7 +1719,7 @@ object Knn {
     requireUnrefined(s, path, "removeFromKnnGraph")
     val ids = graft.Checkpoint.of(vecIds.select("vec_id").distinct())
     val qid = ids.select(col("vec_id").as("query_id"))
-    val edgesCur = graft.Checkpoint.of(s.read.parquet(s"$path/edges"))
+    val edgesCur = graft.Checkpoint.of(Tables.parquet(s, s"$path/edges"))
     val affQ = graft.Checkpoint.of(edgesCur
       .join(ids.select(col("vec_id").as("neighbor_id")),
         Seq("neighbor_id"), "left_semi")
@@ -1775,7 +1775,7 @@ object Knn {
 
   /** The stored edge list (query_id, neighbor_id, rank, cosine). */
   def readKnnGraph(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(cachedGraph(s, dir) + "/edges")
+    Tables.parquet(s, cachedGraph(s, dir) + "/edges")
 
   /** The slice of the driver corpus the INCREMENTAL ingest appends —
     * a deterministic 25% by vec_id, mirrored verbatim in the oracle.
@@ -1792,7 +1792,7 @@ object Knn {
     * fingerprint ([[graft.Artifacts.cached]]).
     */
   def readKnnGraphIncremental(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("knngraph-incr", s, dir) { path =>
+    Tables.parquet(s, graft.Artifacts.cached("knngraph-incr", s, dir) { path =>
       val e = Tables.vectors(s, dir)
       val isSlice = col("vec_id") % INCR_SLICE_MOD === INCR_SLICE_MOD - 1
       buildKnnGraphIndexFrom(e.filter(!isSlice), path)
@@ -1897,7 +1897,7 @@ object Knn {
         "your own artifact via buildKnnGraphIndexFrom.")
     val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
     val refined = graft.Checkpoint.of(nnDescentFrom(
-      s.read.parquet(s"$path/edges").select("query_id", "neighbor_id"),
+      Tables.parquet(s, s"$path/edges").select("query_id", "neighbor_id"),
       lists.select("vec_id", "v")))
     // checkpointed above: the write overwrites its own input path
     refined.write.mode("overwrite").parquet(s"$path/edges")
@@ -2416,7 +2416,7 @@ object Knn {
     * fingerprint ([[graft.Artifacts.cached]]).
     */
   def readKnnGraphTakedown(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("knngraph-takedown", s, dir) {
+    Tables.parquet(s, graft.Artifacts.cached("knngraph-takedown", s, dir) {
       path =>
         val e = Tables.vectors(s, dir)
         val isSlice = col("vec_id") % INCR_SLICE_MOD === INCR_SLICE_MOD - 1
@@ -2811,11 +2811,11 @@ object Knn {
   private[graft] def graphSearchAt(s: SparkSession, path: String,
       q: DataFrame, nSeeds: Int, width: Int,
       hops: Int): (DataFrame, DataFrame) = {
-    val cents = s.read.parquet(s"$path/cents")
+    val cents = Tables.parquet(s, s"$path/cents")
     val lists = s.read.schema(ListsSchema).parquet(s"$path/lists")
-    val sym = s.read.parquet(s"$path/sym")
+    val sym = Tables.parquet(s, s"$path/sym")
       .withColumn("u_cent", col("u_cent").cast("long"))
-    val medoids = s.read.parquet(s"$path/medoids")
+    val medoids = Tables.parquet(s, s"$path/medoids")
       .withColumn("cent_id", col("cent_id").cast("long"))
     // the walk's DRIVER-RESIDENT routing table (nlist×fanout ids —
     // smaller than the codebook the probes broadcast): which cells can
@@ -2830,7 +2830,7 @@ object Knn {
     // belongs in a broadcast join, not driver state — raise loudly
     // instead of OOMing the driver quietly. Parquet count() is
     // metadata-only, no scan.
-    val adjSrc = s.read.parquet(s"$path/celladj")
+    val adjSrc = Tables.parquet(s, s"$path/celladj")
     val adjRows = adjSrc.count()
     require(adjRows <= CELLADJ_DRIVER_BUDGET,
       s"graphSearchAt: celladj has $adjRows rows > driver budget " +

@@ -25,12 +25,14 @@ object Sources {
     */
   def readParquet(spark: SparkSession, path: String,
       schema: Option[StructType] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    val r = spark.read
-    schema.foreach(r.schema)
-    if (mergeSchema) r.option("mergeSchema", "true")
-    r.parquet(path)
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    if (schema.isEmpty && !mergeSchema) graft.Tables.parquet(spark, path)
+    else {
+      val r = spark.read
+      schema.foreach(r.schema)
+      if (mergeSchema) r.option("mergeSchema", "true")
+      r.parquet(path)
+    }
 
   def readCsv(spark: SparkSession, path: String,
       schema: Option[StructType] = None, header: Boolean = true,
@@ -151,7 +153,7 @@ object Sources {
     } else {
       val touched = bucketed.select("_bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
-      val survivors = spark.read.parquet(path)
+      val survivors = graft.Tables.parquet(spark, path)
         .filter(col("_bucket").isin(touched: _*))
         .join(bucketed.select(key).distinct(), Seq(key), "left_anti")
       val merged = survivors.unionByName(bucketed).localCheckpoint()
@@ -169,7 +171,7 @@ object Sources {
     * directly when bucket-local processing wants it).
     */
   def readUpserted(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("_bucket")
+    graft.Tables.parquet(spark, path).drop("_bucket")
 
   /** Small-file COMPACTION of a parquet dataset — the maintenance pass
     * every long-lived ingest loop needs (streaming sinks, upserts, and
@@ -301,14 +303,14 @@ object Sources {
     if (nonzero.isEmpty) return (leafDirs.size, leafDirs.size)
     partCols match {
       case Seq("ingest_id") =>
-        val folded = graft.Checkpoint.of(spark.read.parquet(path)
+        val folded = graft.Checkpoint.of(graft.Tables.parquet(spark, path)
           .withColumn("ingest_id", lit(0L)).distinct())
         folded.write.mode(SaveMode.Overwrite)
           .partitionBy("ingest_id").parquet(path)
       case Seq(top, "ingest_id") =>
         val affected = nonzero.map(_.split("/")(0).split("=")(1).toLong)
           .distinct
-        val folded = graft.Checkpoint.of(spark.read.parquet(path)
+        val folded = graft.Checkpoint.of(graft.Tables.parquet(spark, path)
           .withColumn(top, col(top).cast("long"))
           .filter(col(top).isin(affected: _*))
           .withColumn("ingest_id", lit(0L)).distinct())
@@ -342,7 +344,7 @@ object Sources {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new org.apache.hadoop.fs.Path(path + "._compact_tmp")
     fs.delete(tmp, true)
-    spark.read.parquet(path).repartition(nOut)
+    graft.Tables.parquet(spark, path).repartition(nOut)
       .write.parquet(tmp.toString)
     val old = new org.apache.hadoop.fs.Path(path + "._compact_old")
     fs.delete(old, true)

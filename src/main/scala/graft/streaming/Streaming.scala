@@ -799,7 +799,7 @@ object Streaming {
       val slice = batch.select("vec_id", "v").localCheckpoint()
       try {
         graft.sim.Knn.appendKnnGraph(spark, indexPath, slice, batchId + 1)
-        out(spark.read.parquet(s"$indexPath/edges")
+        out(graft.Tables.parquet(spark, s"$indexPath/edges")
           .join(slice.select(col("vec_id").as("query_id")), "query_id")
           .select("query_id", "neighbor_id", "rank", "cosine"))
       } finally slice.unpersist()

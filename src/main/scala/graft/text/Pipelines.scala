@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -47,10 +48,13 @@ object Pipelines {
       .cast("double") / nTok
     val quality = Tables(s, dir, "documents")
       .filter(nTok >= MIN_TOKENS && swRatio <= MAX_STOPWORD_RATIO)
-    val fp = quality.select(col("doc_id"), col("lang"), col("text"),
-      TextOps.normalizedMd5(col("text")).as("fp"))
-    val keepers = fp.groupBy("fp").agg(min("doc_id").as("keeper"))
-    fp.join(keepers, "fp")
+    // each fp keeps its min doc_id through ONE exchange: an aggregate
+    // joined back would evaluate the filter and md5 on both sides
+    quality.select(col("doc_id"), col("lang"), col("text"),
+        TextOps.normalizedMd5(col("text")).as("fp"))
+      .filter(col("fp").isNotNull)
+      .withColumn("keeper",
+        min("doc_id").over(Window.partitionBy("fp")))
       .filter(col("doc_id") === col("keeper"))
       .select("doc_id", "lang", "text")
       .transform(graft.Checkpoint.of)
@@ -195,7 +199,7 @@ object Pipelines {
 
   /** The stored clustered drop list (doc_id). */
   def readClusteredDrops(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Artifacts.cached("pipelinedrops", s, dir)(
+    Tables.parquet(s, graft.Artifacts.cached("pipelinedrops", s, dir)(
       buildClusteredDrops(s, dir, _)))
 
   private val prepareClusteredPersisted = Q(

@@ -81,7 +81,7 @@ object TextIndex {
       terms: Seq[String]): DataFrame = {
     val distinctTerms = terms.distinct
     require(distinctTerms.nonEmpty, "query needs at least one term")
-    val t = s.read.parquet(s"$path/terms")
+    val t = Tables.parquet(s, s"$path/terms")
       .filter(col("term").isin(distinctTerms: _*))
     // partition directory names infer as int — re-cast to long. The
     // literal isin on term is REDUNDANT with the dictionary join for
@@ -90,7 +90,7 @@ object TextIndex {
     // build the footer stats skip every file/row group whose range
     // excludes the query terms — intra-bucket pruning on top of DPP's
     // bucket pruning.
-    val postings = s.read.parquet(s"$path/postings")
+    val postings = Tables.parquet(s, s"$path/postings")
       .filter(col("term").isin(distinctTerms: _*))
       .withColumn("pb", col("pb").cast("long"))
     alive(s, path,
@@ -116,11 +116,11 @@ object TextIndex {
     val distinctTerms = terms.distinct
     require(distinctTerms.nonEmpty, "query needs at least one term")
     require(k > 0, s"k must be positive, got $k")
-    val t = s.read.parquet(s"$path/terms")
+    val t = Tables.parquet(s, s"$path/terms")
       .filter(col("term").isin(distinctTerms: _*))
     // same pushed In(term, ...) as queryTextIndex: footer-stat pruning
     // inside the DPP-selected buckets
-    val postings = s.read.parquet(s"$path/postings")
+    val postings = Tables.parquet(s, s"$path/postings")
       .filter(col("term").isin(distinctTerms: _*))
       .withColumn("pb", col("pb").cast("long"))
     alive(s, path,
@@ -209,7 +209,7 @@ object TextIndex {
   private def deletedDocs(s: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/deleted")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString)) else None
+    if (fs.exists(p)) Some(Tables.parquet(s, p.toString)) else None
   }
 
   /** Drop tombstoned docs from a postings-derived frame — one thin
@@ -246,7 +246,7 @@ object TextIndex {
       positionsFrom: Option[DataFrame] = None): Unit = {
     positionsFrom.foreach { docs =>
       val cur = graft.Checkpoint.of(alive(s, path,
-        s.read.parquet(s"$path/postings").drop("positions")))
+        Tables.parquet(s, s"$path/postings").drop("positions")))
       val parts = Seq("pb") ++
         (if (cur.columns.contains("batch_id")) Seq("batch_id") else Nil)
       val pos = docs
@@ -264,7 +264,7 @@ object TextIndex {
         .write.mode("overwrite").partitionBy(parts: _*)
         .parquet(s"$path/postings")
     }
-    alive(s, path, s.read.parquet(s"$path/postings")
+    alive(s, path, Tables.parquet(s, s"$path/postings")
         .withColumn("pb", col("pb").cast("long")))
       .groupBy("term", "pb").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path/terms")
@@ -301,7 +301,7 @@ object TextIndex {
   def compactTextIndex(s: SparkSession, path: String,
       splits: Int = 32): Unit = {
     val del = deletedDocs(s, path).getOrElse(return)
-    val cur = s.read.parquet(s"$path/postings")
+    val cur = Tables.parquet(s, s"$path/postings")
     val parts = Seq("pb") ++
       (if (cur.columns.contains("batch_id")) Seq("batch_id") else Nil)
     val keep = graft.Checkpoint.of(
@@ -434,9 +434,9 @@ object TextIndex {
       phrase: Seq[String]): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least two terms")
     val distinctTerms = phrase.distinct
-    val t = s.read.parquet(s"$path/terms")
+    val t = Tables.parquet(s, s"$path/terms")
       .filter(col("term").isin(distinctTerms: _*))
-    val postings = alive(s, path, s.read.parquet(s"$path/postings")
+    val postings = alive(s, path, Tables.parquet(s, s"$path/postings")
       .filter(col("term").isin(distinctTerms: _*))
       .withColumn("pb", col("pb").cast("long"))
       .join(broadcast(t.withColumn("pb", col("pb").cast("long"))),

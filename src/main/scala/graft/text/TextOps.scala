@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.{Q, Tables}
 
@@ -1384,44 +1385,53 @@ object TextOps {
     * Docs found by only one leg keep a NULL rank on the other — the
     * honest provenance column.
     *
-    * Shape: each leg is its own bounded top-k (the global row_number
-    * windows here run over leg-sized frames, ≤ corpus matches); the
-    * fusion is a full outer join of two ≤50-row lists — driver-free and
-    * broadcastable. At 100 TB the legs swap in the persisted index
-    * paths (text_search_ranked's DPP index, knn_ivf_persisted) and the
-    * fusion shape is unchanged.
+    * Shape: each ranking is a bounded top-k ([[rankedTop]]: the plan's
+    * TakeOrderedAndProject, numbered on the driver), and the fusion is a
+    * full outer join of two ≤50-row lists. At 100 TB the legs swap in
+    * the persisted index paths (text_search_ranked's DPP index,
+    * knn_ivf_persisted) and the fusion shape is unchanged.
     */
   private val RRF_K = 60
   private val HYBRID_LEG_K = 50
   private val HYBRID_K = 20
   private val HYBRID_QVEC = 0L
 
+  /** The first `k` rows of `df` in `order` (unique keys last), with their
+    * 1-based position as the non-null long column `rank` appended. The
+    * top-k is Spark's TakeOrderedAndProject, which keeps k rows per
+    * partition, collected (≤ k rows) and numbered on the driver: a
+    * `row_number()` over an unpartitioned window numbers the same rows,
+    * but moves them to one partition to do it, logging a "No Partition
+    * Defined" WARN each time it is planned.
+    */
+  private def rankedTop(df: DataFrame, k: Int, rank: String,
+      order: Column*): DataFrame = {
+    val rows = df.orderBy(order: _*).limit(k).collect().zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema.add(rank, LongType, nullable = false))
+  }
+
   private val hybrid = Q(
     "hybrid_search_rrf",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       import graft.functions.CosineSim.cosineSim
-      val tw = Window.orderBy(col("score").desc, col("doc_id"))
-      val textRanks = bm25Scores(s, dir, BM25_TERMS)
-        .withColumn("text_rank", row_number().over(tw).cast("long"))
-        .filter(col("text_rank") <= HYBRID_LEG_K)
+      val textRanks = rankedTop(bm25Scores(s, dir, BM25_TERMS),
+          HYBRID_LEG_K, "text_rank", col("score").desc, col("doc_id"))
         .select(col("doc_id"), col("text_rank"))
       val e = Tables.vectors(s, dir)
       val qv = e.filter(col("vec_id") === HYBRID_QVEC)
         .select(col("v").as("qv"))
       val cos = cosineSim(col("qv"), col("v"))
-      val vw = Window.orderBy(cos.desc, col("vec_id"))
-      val vecRanks = e.crossJoin(broadcast(qv))
-        .withColumn("vec_rank", row_number().over(vw).cast("long"))
-        .filter(col("vec_rank") <= HYBRID_LEG_K)
+      val vecRanks = rankedTop(e.crossJoin(broadcast(qv)), HYBRID_LEG_K,
+          "vec_rank", cos.desc, col("vec_id"))
         .select(col("vec_id").as("doc_id"), col("vec_rank"))
-      val fw = Window.orderBy(col("rrf_micro").desc, col("doc_id"))
-      textRanks.join(vecRanks, Seq("doc_id"), "full_outer")
+      val fused = textRanks.join(vecRanks, Seq("doc_id"), "full_outer")
         .withColumn("rrf_micro",
           coalesce(expr(s"1000000 DIV ($RRF_K + text_rank)"), lit(0L)) +
             coalesce(expr(s"1000000 DIV ($RRF_K + vec_rank)"), lit(0L)))
-        .withColumn("rank", row_number().over(fw).cast("long"))
-        .filter(col("rank") <= HYBRID_K)
+      rankedTop(fused, HYBRID_K, "rank", col("rrf_micro").desc,
+          col("doc_id"))
         .select("rank", "doc_id", "text_rank", "vec_rank", "rrf_micro")
         .orderBy("rank")
     },

@@ -86,6 +86,54 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
+  test("a small local frame stays local: of and ofCounted run no job and " +
+      "keep rows, schema, nullability and count") {
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    val df = Seq((1L, Some("a"), 2.5), (2L, None, -0.0), (3L, Some("c"), 1.0))
+      .toDF("id", "s", "x")
+    assert(!df.schema("id").nullable && df.schema("s").nullable)
+    val (cp, jobsOf) = withJobs(Checkpoint.of(df))
+    val ((cpC, n), jobsCounted) =
+      withJobs(Checkpoint.ofCounted(df, col("id") >= 2))
+    val ((_, all), jobsAll) = withJobs(Checkpoint.ofCounted(df))
+    assert(jobsOf == 0 && jobsCounted == 0 && jobsAll == 0,
+      s"$jobsOf / $jobsCounted / $jobsAll jobs")
+    assert(n == 2 && all == 3)
+    for (out <- Seq(cp, cpC)) {
+      assert(Checkpoint.local(out).nonEmpty)
+      assert(out.schema == df.schema)
+      assert(out.queryExecution.analyzed.output ==
+        df.queryExecution.analyzed.output, "a checkpoint keeps attributes")
+      assert(out.collect().toSeq == df.collect().toSeq)
+    }
+    // projections and filters of a local frame fold into one relation
+    val ((_, odd), jobsFolded) = withJobs(Checkpoint.ofCounted(
+      df.select((col("id") * 3).as("k")).filter(col("k") > 3),
+      col("k") % 2 === 1))
+    assert(odd == 1 && jobsFolded == 0)
+  }
+
+  test("a local frame over the broadcast threshold is checkpointed") {
+    val s = spark
+    import s.implicits._
+    val df = (1L to 200L).map(i => (i, s"row $i")).toDF("id", "s")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "1024b")
+      val (cp, jobs) = withJobs(Checkpoint.of(df))
+      assert(jobs == 1 && Checkpoint.local(cp).isEmpty)
+      val ((cpC, n), jobsC) = withJobs(Checkpoint.ofCounted(df))
+      assert(n == 200 && jobsC == 1 && Checkpoint.local(cpC).isEmpty)
+      assert(cp.collect().toSeq == df.collect().toSeq)
+      spark.conf.set(key, "-1")
+      assert(Checkpoint.local(Checkpoint.of(df.limit(1))).isEmpty,
+        "a disabled threshold keeps no frame local")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("ofCounted returns identical rows and count in both modes") {
     val df = spark.range(1000).repartition(4).toDF()
     val (cpL, nL) = Checkpoint.ofCounted(df)

@@ -611,6 +611,36 @@ class DedupSpec extends SparkSpec {
     assert(rows == refRows(edges))
   }
 
+  test("connectedComponents over a local edge frame runs no job and " +
+      "equals the loop") {
+    val rnd = new scala.util.Random(5)
+    val raw: Seq[(Any, Any)] = Seq.fill(60)(
+      (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
+      Seq((null, 3L), (7L, null))
+    val local = edgeFrame(raw)
+    assert(isLocal(local))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Shim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val (onDriver, rows) = try {
+      val df = dedup.Dedup.connectedComponents(local)
+      val rs = sortedRows(df)
+      Shim.waitListeners(spark)
+      (df, rs)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"local edges ran ${jobs.get} jobs")
+    assert(isLocal(onDriver))
+    val loop = dedup.Dedup.connectedComponents(local, 25, -1L)
+    assert(onDriver.schema == loop.schema)
+    assert(rows == sortedRows(loop))
+    assert(rows == refRows(raw))
+    bothPaths(raw)
+  }
+
   test("connectedComponents: the driver path and the distributed loop " +
       "return identical rows and schema") {
     import org.scalacheck.{Gen, Prop}

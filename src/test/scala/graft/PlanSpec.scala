@@ -205,6 +205,30 @@ class PlanSpec extends SparkSpec {
       "q56 existence test must plan as a semi join")
   }
 
+  test("hybrid_search_rrf ranks each list through a bounded top-k, never " +
+      "an unpartitioned window") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df("hybrid_search_rrf").collect()
+      org.apache.spark.sql.graft.Shim.waitListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray(Array.empty[String]).toSeq
+    assert(all.count(_.contains("TakeOrderedAndProject(limit=50,")) == 2,
+      "each leg is a 50-row TakeOrderedAndProject")
+    assert(all.exists(_.contains("TakeOrderedAndProject(limit=20,")),
+      "the fused list is a 20-row TakeOrderedAndProject")
+    assert(!all.exists(_.contains("Window [")),
+      "an unpartitioned window moves every row to one partition")
+  }
+
   test("q34/q35 window pipelines run on ONE hash exchange") {
     // both stack multiple windows + an aggregate on the same keys: the
     // plan must exchange once and re-sort in place, never re-shuffle
